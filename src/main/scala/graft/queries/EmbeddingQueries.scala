@@ -216,7 +216,7 @@ object EmbeddingQueries {
     * IVF (k=10 cells, nprobe=6 — e06's exact configuration) against the
     * exact brute-force top-5 — the "measure, don't guess" artifact for the
     * accuracy/cost trade the IVF index makes. The round-8 sweep
-    * (graft.RecallSweep, curve in README) put this operating point at
+    * (curve in README) put this operating point at
     * 0.925 mean recall@5 for ~60 % of the corpus scored per query; the
     * synthetic embeddings are near-uniform within their 10 label clusters,
     * so recall ≈ budget is the honest ceiling here — real clustered
@@ -256,7 +256,7 @@ object EmbeddingQueries {
     * of the corpus and measures ≈ 0.05 recall here — the standard fix is
     * multi-probe: also search every bucket within Hamming radius 3 of the
     * query's 6-bit signature (1+6+15+20 = 42 of 64 buckets ≈ 66 % of the
-    * corpus). The round-8 sweep (graft.RecallSweep, curve in README) put
+    * corpus). The round-8 sweep (curve in README) put
     * this point at 0.900 mean recall@5; radius 2 measured 0.525 at 33 %
     * and finer signatures (8/10 planes) were strictly worse at equal
     * budget — on these near-uniform synthetic embeddings recall ≈ budget
