@@ -57,15 +57,6 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // comma-separated allowlist for targeted perf iteration; unset = all
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    // suite-order experiment knobs (round 15, the d18 adjudication): pin one
-    // query to the FIRST or LAST slot of every timed pass while the rest
-    // stay shuffled — separates cold/JIT cost (first) from steady-state
-    // suite-context cost (last) for a query whose driver med is disputed
-    val pinFirst = sys.env.get("SPARK_GRAFT_PIN_FIRST")
-    val pinLast = sys.env.get("SPARK_GRAFT_PIN_LAST")
-    require(pinFirst.isEmpty || pinFirst != pinLast,
-      s"PIN_FIRST and PIN_LAST name the same query (${pinFirst.get}) — " +
-        "it would run twice per pass and double its sample count")
     val queries = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
@@ -100,10 +91,7 @@ object Bench {
       // query's median is systematically biased by its suite position;
       // seeded by pass number so runs stay reproducible
       val shuffled = new scala.util.Random(pass.toLong).shuffle(names)
-      val order = (pinFirst.toSeq.filter(shuffled.contains) ++
-        shuffled.filterNot(n => pinFirst.contains(n) || pinLast.contains(n)) ++
-        pinLast.toSeq.filter(shuffled.contains))
-      order.foreach { name =>
+      shuffled.foreach { name =>
         val fn = queries(name)
         val t0 = System.nanoTime()
         val ok =
