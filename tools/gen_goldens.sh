@@ -6,7 +6,7 @@
 # shifts a golden REQUIRES re-running this script (and eyeballing the
 # diff for intent) before tests go green again. Commit file + manifest
 # together ONLY after checking the diff is an intentional behavior change.
-cd /root/repo || exit 1
+cd "$(dirname "$0")/.." || exit 1
 # optional $2: comma-list of golden names to regenerate selectively
 # (adding ONE golden must not re-snapshot every existing one)
 sbt -batch "runMain graft.GenGoldens ${1:-/root/testdata/sf0.01} ${2:-}" || exit 1

@@ -7,7 +7,7 @@
 # it runs every round. Writes the informative log tail to
 # SMOKE_r${ROUND:-X}.log so the round artifacts carry the evidence that
 # the gate ran and passed.
-cd /root/repo || exit 1
+cd "$(dirname "$0")/.." || exit 1
 out="SMOKE_r${ROUND:-X}.log"
 # capture sbt's own exit status BEFORE any pipeline: a `sbt | grep | tee`
 # chain reports the LAST command's status, which silently turned a failing
