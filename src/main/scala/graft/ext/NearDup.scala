@@ -475,8 +475,11 @@ object NearDup {
           .write.mode("overwrite").partitionBy("batch_id", "bp")
           .parquet(relPath(dir, "buckets", epoch))
       }
-      Await.result(sh, Duration.Inf)
-      Await.result(bk, Duration.Inf)
+      // settle BOTH writes before an error escapes: rethrowing the first
+      // failure while the other job still runs would leave it writing
+      // behind the caller's cleanup
+      Seq(sh, bk).map(f => Await.ready(f, Duration.Inf).value.get)
+        .collectFirst { case scala.util.Failure(e) => throw e }
     }
 
     /** Append ONE ingest batch's relations to the live epoch, keyed and

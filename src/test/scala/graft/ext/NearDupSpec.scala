@@ -633,4 +633,28 @@ class NearDupSpec extends SparkSpec {
       .select("shingle").as[String].collect().toSeq
     assert(got == Seq("two words"))
   }
+
+  test("writeRelations settles both writes before the first failure escapes") {
+    // the shingles write fails at once; the buckets write is still
+    // sleeping through its rows when it does
+    val slow = udf { (x: Long) => Thread.sleep(1500); x }
+    val shingles = spark.range(0, 4, 1, 2).select(col("id"),
+      raise_error(lit("boom-shingles")).cast("string").as("shingle"))
+    val buckets = spark.range(0, 8, 1, 4).select(
+      struct(slow(col("id")).as("bh")).as("bk"), array(col("id")).as("ids"))
+    val dir = java.nio.file.Files.createTempDirectory("neardup-settle").toString
+    val err = intercept[Exception] {
+      NearDup.NearDupIndex.writeRelations(shingles, buckets, dir, 0, 4, -1L)
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("boom-shingles")), err)
+    // job-end events reach the status tracker through the async listener
+    // bus; allow it a moment, far less than the buckets write's 3 s
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 1000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"jobs still running: ${tracker.getActiveJobIds.mkString(",")}")
+  }
 }
