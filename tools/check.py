@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run Verify's parquet dumps
-against the DuckDB oracles and diff. Usage: check.py <sfDir> <verifyOutDir>."""
+against the DuckDB oracles and diff. Usage: check.py <sfDir> <verifyOutDir>.
+Also fails every query Verify listed in failed.txt and every oracle key
+with no output directory, so a query that throws cannot drop out."""
 import sys, os, json, glob
 import duckdb
 import pandas as pd
@@ -17,7 +19,17 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 names = sorted([os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)])
 fails, passes, rows_only = [], [], []
+failed_path = f"{outdir}/failed.txt"
+if os.path.exists(failed_path):
+    for line in open(failed_path):
+        name, _, msg = line.rstrip("\n").partition("\t")
+        fails.append((name, f"Verify failed: {msg}"))
+failed_names = {n for n, _ in fails}
+for name in sorted(set(oracle) - set(names) - failed_names):
+    fails.append((name, "no output directory"))
 for name in names:
+    if name in failed_names:  # a stale directory from an earlier run
+        continue
     spark_df = pd.concat([pd.read_parquet(f) for f in
                           glob.glob(f"{outdir}/{name}/*.parquet")], ignore_index=True) \
                if glob.glob(f"{outdir}/{name}/*.parquet") else pd.DataFrame()
