@@ -648,6 +648,10 @@ class NearDupSpec extends SparkSpec {
     }
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
     assert(chain.exists(e => String.valueOf(e.getMessage).contains("boom-shingles")), err)
+    // the buckets write had finished (committed) before the error escaped
+    val committed = new java.io.File(
+      NearDup.NearDupIndex.relPath(dir, "buckets", 0), "_SUCCESS")
+    assert(committed.exists(), "the error escaped while the buckets write still ran")
     // job-end events reach the status tracker through the async listener
     // bus; allow it a moment, far less than the buckets write's 3 s
     val tracker = spark.sparkContext.statusTracker
