@@ -5,1665 +5,11 @@ import java.nio.file.{Files, Paths}
 /** Generates PLANS.md: a compact physical-plan summary per registered query
   * (join strategies, pushed filters, read schemas) —
   * the audit trail for the plan-quality claims in README/SURVEY §8.
+  * Everything in it is generated; analyst notes on the plans are kept by
+  * hand in plans/NOTES.md.
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outFile>"`.
   */
 object PlanDump {
-
-  /** Analyst notes appended under a query's section on every regeneration —
-    * findings that a raw plan dump can't carry (profiled floors, measured
-    * trade-offs). Keep these current when the underlying code changes.
-    */
-  private val notes: Map[String, String] = Map(
-    "q56_asof_next_purchase" -> ("round 11: forward as-of via " +
-      "tag+union+window — NO join operator at all; one user_id " +
-      "Exchange + per-group sort carries the whole match, so cost is " +
-      "sort-merge-join-shaped and independent of time-range density " +
-      "(the naive range-join form explodes quadratically per key). " +
-      "PlanAuditSpec pins the join-free single-shuffle plan."),
-    "q57_asof_nearest_purchase" -> ("round 11: nearest as-of — BOTH " +
-      "directional fills (backward last + forward first) share one " +
-      "shuffle and one sort and fuse into a SINGLE Window exec with two " +
-      "frames (PlanAuditSpec pins Window-node count == 1); the choice " +
-      "is a row-local interval comparison. Same n+m single-exchange " +
-      "price as q56."),
-    "t23_inverted_index" -> ("round 11: posting-list build — tokenize " +
-      "is scan-stage column work, ONE (term, doc_id) exchange with " +
-      "map-side partial counts; df is a per-term fold of the postings " +
-      "themselves (broadcast back), document text read exactly once. " +
-      "The relation is additive over disjoint batches — s15 ingests it " +
-      "continuously through AdditiveStats."),
-    "t25_bm25_search" -> ("round 11: BM25 — posting relation pruned to " +
-      "the query's terms IN the tokenize stage, df/corpus-stats " +
-      "broadcast, one doc-keyed exchange for dl + the DECIMAL score " +
-      "fold, TakeOrderedAndProject(20) instead of a global sort " +
-      "(PlanAuditSpec pins). At 100 TB the posting store replaces the " +
-      "tokenize: s15's probe plan shows the term filter as a parquet " +
-      "PushedFilter on the store scan."),
-    "s15_posting_ingest" -> ("round 11: continuous inverted-index " +
-      "ingest on the AdditiveStats protocol (idempotent batch_id " +
-      "fragments, CAS folds, replay watermark, stream-identity pin — " +
-      "the third count relation on one store implementation). The " +
-      "search probe pushes In(term, ...) into the store's parquet scan " +
-      "(PlanAuditSpec pins) — a query touches |terms| posting lists, " +
-      "never the corpus."),
-    "src17_minmax_skipping" -> ("round 11: file-level min-max skipping " +
-      "— stats relation is ONE aggregate scan over _metadata.file_path " +
-      "(additive across appends, persistable; probe-time collect " +
-      "bounded by file count), pruning is conservative (null stats " +
-      "kept) so results are exactly the full-scan results. " +
-      "FileSkippingSpec pins strictly-fewer-files + no-lost-rows on a " +
-      "range-clustered layout. Complements src12: Z-order makes files " +
-      "skippable, this makes the listing skip them."),
-    "q58_gap_fill_daily" -> ("round 11: calendar densification — the " +
-      "spine is a per-group sequence+explode (distributed, bounded by " +
-      "users x span), NOT a driver loop or a global-calendar cross " +
-      "join; one broadcast join back to the daily counts at this SF " +
-      "(key-partitioned at scale)."),
-    "q59_pagerank" -> ("round 11: 3 power steps unrolled — per step " +
-      "one edge-rank join (node-partitioned SMJ at scale) + one " +
-      "target-keyed partial-aggregated sum; rank vector never leaves " +
-      "the cluster, teleport term via broadcast n. DECIMAL(28,15) " +
-      "contribution sums make the float ranks engine-replayable " +
-      "(GraphOpsSpec pins mass conservation); damping restricted to " +
-      "binary64-exact constants."),
-    "q60_rolling_distinct_users" -> ("round 11: trailing-7-day exact " +
-      "distinct users — sliding window x COUNT(DISTINCT) doesn't " +
-      "compose as a window function, so the plan is contribution " +
-      "fan-out: distinct (user, day) pairs explode to their 7 report " +
-      "days (row-local, bounded 7x on the ALREADY-distinct per-day " +
-      "relation, not the raw events), then ONE day-keyed distinct " +
-      "aggregate; the range clamp is a 1-row broadcast. No per-day " +
-      "self-join, no 7-pass scan — at 100 TB the fan-out rides the " +
-      "scan stage and the only wide exchange is the final distinct."),
-    "s16_windowed_mv" -> ("round 11: continuous windowed-metric MV on " +
-      "the AdditiveStats protocol — per-batch (day, dim) counts are " +
-      "ONE map-side-combined aggregate of the batch, landed as an " +
-      "idempotent batch_id fragment; readers fold #windows x #dims x " +
-      "#fragments rows (compaction keeps that bounded), so the " +
-      "dashboard probe never rescans the fact table. Replay/crash " +
-      "story (CAS folds, compacted_through watermark, identity pin) " +
-      "inherited from the shared store; the oracle recomputes from " +
-      "the raw events, proving the fold arithmetic."),
-    "q61_bfs_levels" -> ("round 11: bounded BFS — frontier expansion " +
-      "with an anti-join against the visited set keeps the working " +
-      "relations NODE-sized while the oracle's recursive CTE " +
-      "enumerates path-length pairs (exponential on dense graphs at " +
-      "scale); per level one edge-frontier join + one distinct, " +
-      "frontier localCheckpointed (without the cut the plan tree " +
-      "doubles per level and Catalyst analysis goes exponential " +
-      "around depth 10)."),
-    "q62_weighted_sample" -> ("round 11: Efraimidis-Spirakis weighted " +
-      "sampling — the ln(u)/w score is row-local scan-stage " +
-      "arithmetic (md5-derived uniform, integer-exact in binary64), " +
-      "selection is TakeOrderedAndProject(20): per-partition heaps, " +
-      "no global sort, no shuffle beyond the top-k merge."),
-    "q63_rolling_anomaly" -> ("round 11: rolling z-score — one " +
-      "(user, day) partial-aggregated group-by, then ONE user-keyed " +
-      "window with a 6-row frame carrying decimal-folded sum and " +
-      "sum-of-squares; variance via the sums identity because " +
-      "stddev_samp builtins differ across engines in the last bits " +
-      "(Welford vs naive) while decimal sums + a fixed-order double " +
-      "expression replay bit-for-bit."),
-    "t26_bpe_merges" -> ("round 11: BPE training — the corpus pass is " +
-      "ONE map-side-combined word-count aggregate (the paper's own " +
-      "decomposition: BPE needs the word-frequency relation, not the " +
-      "corpus); the merge loop runs driver-side over the Zipf-bounded " +
-      "vocabulary under the explicit maxVocabRows contract (the IVF-" +
-      "codebook argument). Exact integer pair counts + lexicographic " +
-      "tie-break make the table partitioning-invariant -> golden-" +
-      "gateable."),
-    "t27_bpe_encode" -> ("round 11: BPE inference is a codegen " +
-      "expression (shared rank map via addReferenceObj) — greedy " +
-      "lowest-rank merging is data-dependent iteration that no fixed " +
-      "HOF composition expresses without vocab-depth expression " +
-      "nesting; encoding rides the corpus scan stage, zero exchange " +
-      "before the output."),
-    "t28_tfidf_cosine" -> ("round 11: sparse-vector similarity on the " +
-      "inverted index — the query document's weighted terms broadcast, " +
-      "dot products are one semi-pruned doc-keyed aggregate over the " +
-      "query's posting lists (non-shared terms and document text never " +
-      "shuffle), norms are a reusable posting fold, TakeOrdered(10). " +
-      "DECIMAL(28,12)-folded products make the double cosines replay " +
-      "bit-for-bit (the BM25 recipe). At 100 TB this runs off the " +
-      "persisted posting store with the term filter pushed into the " +
-      "scan (s15's probe shape)."),
-    "src18_corrupt_quarantine" -> ("round 11: PERMISSIVE JSONL ingest " +
-      "with a corrupt-record column — parsing is scan-stage row-local " +
-      "work (no exchange at all); bad rows carry their raw payload to " +
-      "quarantine instead of being dropped (DROPMALFORMED) or killing " +
-      "the job (FAILFAST), the only acceptable contract for web-scale " +
-      "corpus ingest."),
-    "src19_bloom_skipping" -> ("round 11: per-file bloom skipping — " +
-      "min-max is provably useless for a point probe on a column the " +
-      "layout is not clustered by (every file's range spans the key " +
-      "space; the spec pins 10/10 kept), the per-file occupied-" +
-      "position sets prune to the files the key landed in. Stats " +
-      "build = one aggregate scan bounded by 2*bits ints per file; " +
-      "probe-time collect bounded by file count; no false negatives " +
-      "-> pruned read == full scan."),
-    "src20_incremental_pull" -> ("round 11: incremental JDBC " +
-      "extraction — the watermark filter ships as remote SQL (the " +
-      "database scans its index; Spark reads only the delta rows), " +
-      "each pull lands as an idempotent pull=<n> partition before the " +
-      "(watermark, counter) CAS, and the new watermark derives from " +
-      "the LANDED parquet, never a second source read. At warehouse " +
-      "scale this replaces the reference's nightly reload-the-world."),
-    "q66_revenue_share" -> ("round 11: ratio-to-report — the region " +
-      "denominator is a separate decimal-exact aggregate joined back " +
-      "broadcast, NOT a window sum over doubles (engine-dependent " +
-      "accumulation order); snowflake dims broadcast, partial " +
-      "aggregation map-side."),
-    "t30_langid_eval" -> ("round 11: classifier eval — ONE pass over " +
-      "the corpus for the confusion marginals (the lang-id expression " +
-      "is scan-stage column algebra), then class-sized joins; classes " +
-      "= gold UNION predicted so a predicted-only class gets its " +
-      "zero-recall row. Metrics are fixed-order double divisions off " +
-      "exact counts, F1 from the UNROUNDED p/r — hash-parity with " +
-      "DuckDB."),
-    "s18_distinct_mv" -> ("round 11: continuous distinct-count view — " +
-      "per-batch per-day KMV sketches (ONE map-side-combined aggregate " +
-      "carrying k longs per day) land as AdditiveStats fragments with " +
-      "the protocol's fold now pluggable (KmvMergeAgg; KMV union is " +
-      "exact, so fold order cannot perturb the view). The sf0.01 " +
-      "oracle is a full COUNT(DISTINCT): every day holds < k = 256 " +
-      "distinct users, the regime where the sketch is exact by " +
-      "construction — the gate proves the fragment/fold/replay " +
-      "machinery; estimation is pinned by q40's golden. The exact " +
-      "alternative costs O(distinct keys) per window; this costs O(k)."),
-    "t29_phrase_search" -> ("round 11: exact phrase search — slot " +
-      "algebra over the POSITIONAL index (slot i = its term's postings " +
-      "shifted by i; all-k-slots coverage of a (doc, start) is an " +
-      "occurrence): two pruned posting lists, ONE (doc, start) " +
-      "aggregate, repeated-word phrases and overlapping occurrences " +
-      "exact, document text never participates. At 100 TB the " +
-      "positional store is the persisted tier and the term filter " +
-      "pushes into its scan like s15's probe."),
-    "e19_cell_balanced_sample" -> ("round 11: embedding-space-balanced " +
-      "sampling — cell assignment is the fused NearestCentroidExpr " +
-      "codegen loop riding the scan, the draw is q46's one-exchange " +
-      "stratum window; exactly k per cell regardless of corpus density " +
-      "skew (the diversity-sampling curation step; a uniform draw over " +
-      "a 90%-one-cluster corpus is 90% that cluster)."),
-    "q64_cms_frequency" -> ("round 11: count-min sketch — ONE pass, " +
-      "fixed memory, cell-wise-additive merge (order-independent, so " +
-      "the sketch bytes are partitioning-invariant — CmsSpec pins it); " +
-      "probe is driver-side over a bounded 20-key list. Sized small " +
-      "(eps 0.1) deliberately so the golden exhibits the one-sided " +
-      "error: all 20 probes overestimate, none under."),
-    "q65_bucketed_interval_join" -> ("round 11: keyless interval join " +
-      "— Spark's native plan for this predicate is a " +
-      "BroadcastNestedLoopJoin (quadratic); range bucketing makes the " +
-      "bucket id a hash-join key (row-local interval fan-out " +
-      "ceil(span/W)+1, exact refine inside the join) — " +
-      "IntervalJoinSpec pins nested-loop equivalence under four bucket " +
-      "widths and the no-BNLJ plan. W tunes fan-out vs per-bucket " +
-      "population; both stay declarative so pruning and partial " +
-      "aggregation survive."),
-    "s17_join_view" -> ("round 11: incrementally-maintained equi-join " +
-      "view — per batch dJ = dAxB + AxdB + dAxdB where the batch side " +
-      "of each term broadcasts (history is unbounded, deltas are " +
-      "not) and history reads prune to committed batch_id fragments; " +
-      "with buckets > 0 the stored histories are additionally " +
-      "hash-bucketed on the join key and the delta join reads only " +
-      "the buckets the batch's keys touch (JoinViewSpec pins the " +
-      "PartitionFilters), so per-batch cost tracks the delta, not " +
-      "the accumulated history. The accumulated join relation is what " +
-      "readers query instead of re-joining two fact tables; " +
-      "committed_through gates readers off half-written batches; " +
-      "compaction is a pure re-layout fold."),
-    "t17_doc_chunking" -> ("round 11: stride-window chunking is one " +
-      "whole-stage-codegen span — tokenize, sequence of starts, " +
-      "posexplode, slice — zero Exchange; at 100 TB it is a pure map " +
-      "over the corpus scan and output fan-out is ceil(tokens/stride) " +
-      "rows per document carrying only their own slice."),
-    "src11_scd2_merge" -> ("round 11: SCD2 merge over a hash-bucketed " +
-      "dimension — the read-back is broadcast-semi pruned to the " +
-      "buckets the batch's keys hash into, version chains resolve in " +
-      "one key join, and the rewrite goes through the durable staged " +
-      "hop (Scd2Spec pins single-bucket rewrites for a single-key " +
-      "batch; ScaleSmoke's scd2Flat gate holds single-key merge time " +
-      "FLAT at a 10x dimension with buckets scaled alongside). The " +
-      "monotonic batch-clock guard refuses stale/recycled batch ids — " +
-      "the fresh-checkpoint failure mode of scd2Stream."),
-    "src12_zorder_layout" -> ("round 11: full-table re-layout = one " +
-      "approxQuantile pass + one range Exchange + local sort; the " +
-      "apply step is a FILE MOVE from the marked stage (no recompute, " +
-      "z-locality survives byte-for-byte, crash windows covered by " +
-      "Zorder.recover — ZorderSpec drills both). Layout effect pinned " +
-      "with parquet footer stats: a 5% box on either clustered column " +
-      "touches <=8/16 files vs 16/16 row-ordered. ScaleSmoke's " +
-      "zorderLinear gate holds the rewrite within 2x of linear at 10x."),
-    "e16_semantic_dedup" -> ("round 11: SemDeDup = the capped blocked " +
-      "cosine pair relation (e05's plan) + a distinct + left_anti — no " +
-      "new shuffle class; the oracle-gated form blocks by label, the " +
-      "scale form by IVF cell (cell-size-capped pair expansion, " +
-      "ScaleSmoke hot-key gate 10x). Over-cap blocks skip pair " +
-      "expansion and keep all members: the cap degrades retention, " +
-      "never silently deletes."),
-    "d15_span_coverage" -> ("round 11: exact-substring span dedup, " +
-      "detection side. Windows explode row-locally (tokens-x, the " +
-      "d02-shingle amplification); phase 1 shuffles only (xxhash64, " +
-      "doc_id) with map-side partial aggregation, phase 2 re-derives " +
-      "windows and joins the candidate hashes BEFORE any (hash, text) " +
-      "aggregate, so full window text shuffles only for the Zipf-headed " +
-      "duplicated subset (PlanAuditSpec pins the prune-below-aggregate " +
-      "ordering and the 2-column ReadSchema on every scan; a 64-bit " +
-      "collision splits rather than merges — exact recount by (hash, " +
-      "text)). Coverage is a per-doc merged-interval aggregate HOF — " +
-      "no position explode, no window function. The branch recompute " +
-      "(4 pruned scans) is the deliberate trade against materializing " +
-      "the tokens-x window relation; AQE exchange reuse dedups the " +
-      "repeated candidate subtree at runtime. ScaleSmoke holds it " +
-      "within 2x of linear at 10x + 3000-doc hot key."),
-    "t19_span_removal" -> ("round 11: the apply side of d15 — same " +
-      "two-phase candidate prune, then duplicated start positions fold " +
-      "per doc (flatten + array_distinct, row-local, bounded by doc " +
-      "length) and the token filter runs in-row (filter HOF with " +
-      "index); the cleaned text never exists as exploded rows. " +
-      "String-exact against the DuckDB list-comprehension rebuild."),
-    "t22_lm_trigram" -> ("round 11: the full Brants backoff chain — " +
-      "t20's plan one level deeper (three count relations, five left " +
-      "joins, all vocabulary-sized/broadcastable); branch arithmetic is " +
-      "a fixed-order CASE of IEEE-exact ops so the double score " +
-      "hash-matches DuckDB."),
-    "t20_lm_likelihood" -> ("round 11: stupid-backoff bigram scoring — " +
-      "the model IS two additive count relations (unigrams, bigrams) + " +
-      "a 1-row total; scoring is two left joins + a broadcast cross of " +
-      "the total. At 100 TB the count side is Zipf-bounded vocabulary " +
-      "(broadcastable); every per-bigram quotient is one IEEE-exact " +
-      "double op and the doc mean accumulates in DECIMAL, which is " +
-      "what lets a float score hash-match DuckDB bit-for-bit."),
-    "e17_ann_compaction" -> ("round 11: the probe runs against a " +
-      "COMPACTED index — deletions semi-pruned, fragments folded to " +
-      "one file per cell — so the plan is e13's probe shape " +
-      "(PartitionFilters on (frag, cell), vector-free ReadSchema) with " +
-      "the post-maintenance layout. The compaction itself is O(index) " +
-      "re-layout under a crash-safe epoch swap; codebooks carried, so " +
-      "it does not reset the codebook-drift clock (e15 measures that). " +
-      "ROUND 15 ADJUDICATION of the BENCH_r14 artifact regression (min " +
-      "10.14 s vs 2.30 r13 / 2.23 builder same-commit, on code no r14 " +
-      "commit touched): quiet-box SOLO min-of-5 on the same HEAD = " +
-      "3.20 min / 3.96 med / 4.58 max — the 10.14 does NOT reproduce " +
-      "at any quantile. Mechanism: e17 is the suite's most filesystem-" +
-      "heavy query (O(index) re-layout + CAS epoch swap + grace-epoch " +
-      "sweep per pass), so it is the first to absorb sustained box I/O " +
-      "contention; the r14 driver run showed the same contention " +
-      "signature suite-wide (11 queries >2x med/min spread vs zero in " +
-      "the builder run). No code change; the solo measurement is the " +
-      "steady state."),
-    "d16_span_decontaminate" -> ("round 11: span-level n-gram " +
-      "decontamination — the benchmark reduces to its distinct window " +
-      "strings and BROADCASTS; the contamination predicate is a " +
-      "map-side LeftSemi on (hash, text) inside the corpus scan stage, " +
-      "so the 100 TB corpus never shuffles for the check (PlanAuditSpec " +
-      "pins exactly two hash exchanges: the benchmark's own distinct " +
-      "and the per-document positions fold). d08/d09 drop whole " +
-      "contaminated documents; this excises the overlapping tokens and " +
-      "keeps the clean remainder."),
-    "q52_time_range_window" -> ("round 11: value-based RANGE frame over " +
-      "epoch seconds — one user-key exchange + per-partition ordered " +
-      "frame scan; equal-timestamp peers aggregate identically under " +
-      "any partitioning, and the windowed sum accumulates in DECIMAL " +
-      "for cross-engine parity."),
-    "e18_filtered_ann" -> ("round 11: filtered vector search — the " +
-      "allow-list semi-joins the (frag, cell)-pruned code relation " +
-      "BEFORE PQ scoring (pre-filter: disallowed vectors never cost a " +
-      "LUT lookup or re-rank, topK stays full-depth under selective " +
-      "predicates). Plan = e13's probe shape + one semi-join; at 100 TB " +
-      "the predicate side is an id relation that broadcasts when " +
-      "selective and shuffle-joins otherwise."),
-    "src14_schema_evolution" -> ("round 11: additive schema evolution — " +
-      "mergeSchema read over batch-partitioned layouts; pre-evolution " +
-      "partitions are never rewritten (their rows surface the new " +
-      "column as NULL), so evolution cost is zero I/O on history. " +
-      "Widening/renames go through a staged rewrite instead — the " +
-      "additive contract is what a 100 TB table can afford."),
-    "s14_span_stats_ingest" -> ("round 11: the span family's continuous " +
-      "form on the SHARED AdditiveStats store (the layer extracted from " +
-      "LineDedup's round-10 stats store — one implementation under both " +
-      "count relations): per-batch window-frequency fragments sum to " +
-      "the corpus statistics, the staged fixture folds an epoch " +
-      "mid-accumulation, and the stats-resolved cut hashes identically " +
-      "to t19's one-shot removal — the oracle IS t19's SQL."),
-    "s13_funnel_conversion" -> ("round 11: k-stage funnel = k " +
-      "combiner-collapsed exchanges (partial_min map-side, shuffle " +
-      "carries one row per entity per map partition), funnel-state " +
-      "joins broadcast small / co-partition large, no sort and no " +
-      "window over the event list; chain semantics are conditional " +
-      "mins so any engine resolves identically (PlanAuditSpec pins " +
-      "the 3-exchange no-SMJ shape)."),
-    "d17_containment_pairs" -> ("round 11: asymmetric containment over " +
-      "the same exact 8-byte-hash shingle join as d02 — the shuffle " +
-      "carries hashes, the pair aggregate is combiner-friendly; like " +
-      "d02 this is the EXACT sibling (LSH-banded candidates front it " +
-      "at corpus scale, capped like d03)."),
-    "t21_within_doc_dedup" -> ("round 11: intra-document line dedup is " +
-      "pure row-local column algebra (filter-with-index + prefix " +
-      "first-occurrence test) — ZERO Exchange, rides the scan stage; " +
-      "per-row cost is O(lines^2) on the normalized forms, bounded by " +
-      "document size, not corpus size."),
-    "q55_cohort_retention" -> ("round 11: two user-keyed aggregates + " +
-      "one (cohort, offset) count — all partial/combiner-friendly, no " +
-      "window; the user-key join co-partitions with the aggregates."),
-    "q53_full_outer_join" -> ("round 11: reconciliation full-outer — " +
-      "one shuffle pair on the join key; both unmatched sides " +
-      "null-padded."),
-    "q54_nullsafe_join" -> ("round 11: null-safe equality (<=>): the " +
-      "NULL key groups pair exactly once — ordinary equality would " +
-      "silently drop them."),
-    "q51_unpivot" -> ("round 11: native unpivot lowers to Expand — " +
-      "row-local 3x fan-out above the feeding aggregate, no new " +
-      "exchange class."),
-    "s12_interval_left_join" -> ("round 11: s08's plan with LeftOuter — " +
-      "same single user-key shuffle pair; in streaming mode the " +
-      "time-range predicate bounds BOTH state stores and null-padded " +
-      "rows emit on watermark passage (StreamingSpec drives the " +
-      "sentinel-advanced watermark case)."),
-    "s11_stream_drift" -> ("round 11: the ONLY stateful operator is one " +
-      "windowed aggregation carrying bins+1 longs per window (per-bin " +
-      "conditional counts + total in a single agg, map-side combined); " +
-      "normalization and the PSI algebra are stateless projections, so " +
-      "the identical plan runs under Structured Streaming with a " +
-      "watermark (StreamingSpec differential) and the reference " +
-      "histogram is a broadcast literal, not a join."),
-    "t18_quality_classifier" -> ("round 11: hashed-BoW scoring = " +
-      "explode tokens -> codegen rolling-hash bucket + integer weight " +
-      "-> one groupBy(doc) partial-agg shuffle carrying a single " +
-      "(count, sum) pair per document after map-side combine; weights " +
-      "are integers over a common denominator so cross-engine sums are " +
-      "EXACT (no double accumulation order), and the keep gate " +
-      "compares the integer sum. Trained weights plug in as a " +
-      "broadcast literal array (HashedLinearScorerSpec)."),
-    "q35_from_json" -> ("round-3's 6.6 s reading was run-context noise, not " +
-      "a plan or expression cost: profiled in isolation AND in-suite in " +
-      "round 4, q35 is 0.39 s at sf0.1 — within 1.1x of its " +
-      "get_json_object twin q22 (0.37 s). JsonToStructs rides " +
-      "CodegenFallback but its per-row cost (~0.3 us over the scan) is " +
-      "immaterial; keeping the typed from_json form."),
-    "d11_indexed_neardup" -> ("round 6: the corpus side of the probe is " +
-      "map-side only — the stored bucket relation (pre-grouped bk->ids) is " +
-      "broadcast-semi-joined against the batch's distinct band keys BEFORE " +
-      "any aggregation, and corpus shingles are semi-pruned to candidate " +
-      "ids before the exact-verify joins, so no Exchange touches O(corpus) " +
-      "rows (PlanAuditSpec pins both paths; ScaleSmoke measures per-batch " +
-      "time FLAT, 0.95x, when the corpus grows 10x). Closes the round-5 " +
-      "O(corpus)-shuffle finding; d10/d12/d13 share the same plan shape. " +
-      "Round 8: the stored layout is hash-partitioned ((batch_id, " +
-      "ip=pmod(id,parts)) / (batch_id, bp=pmod(bk.bh,parts))) and both " +
-      "corpus scans carry PartitionFilters built from the batch's " +
-      "touched-partition lists (PlanAuditSpec pins them; ScaleSmoke's " +
-      "bytes A/B measures the pruned probe at 0.28x of the unpruned " +
-      "bytes for a small batch). The two prune broadcasts are size-gated " +
-      "(maxBroadcastKeys, default 2M keys): past the gate they degrade " +
-      "to shuffled left-semis — slower, never an executor OOM " +
-      "(NearDupSpec pins plan + result equality in both modes). Fixture " +
-      "staging (corpus parquet + index build) is memoized per JVM and " +
-      "excluded from timed passes. Closes the round-6/7 unbucketed-scan " +
-      "and forced-broadcast findings."),
-    "t12_sequence_packing" -> ("round 8: concatenate-and-chunk packing via " +
-      "the distributed two-pass stream-position operator — range sort, " +
-      "per-partition weight sums to broadcast prefix offsets, then the " +
-      "running sum as a window PARTITIONED BY the range-partition id. The " +
-      "only SinglePartition exchange in the plan carries one row per " +
-      "partition (the offsets relation), never data (PackingSpec pins " +
-      "it); a naive global-window cumsum would serialize the corpus " +
-      "through one task at 100 TB."),
-    "d02_ngram_jaccard" -> ("round 12 adjudication of the r11 med spike " +
-      "(med 2.72 -> 5.27 with min 2.07 / max 9.60 across 3 passes — the " +
-      "documented noise signature): a quiet-box min-of-5 measures 2.35 " +
-      "min / 2.41 med / 2.71 max — a TIGHT spread at the historical " +
-      "steady state, closing the spike as load inflation with unchanged " +
-      "code (plan unchanged in this dump: fused codegen shingles, 3x " +
-      "BroadcastHashJoin, first exchange the capped bucket group-by)."),
-    "d03_minhash_lsh" -> ("round 11 smoke-gate variance adjudication: " +
-      "four same-code hot-key smoke runs in one day measured the 10x " +
-      "big leg at 20.7-30.4 s and the 1x denominator at 1.15-2.43 s — " +
-      "vs-linear 1.23x/1.80x/2.16x/2.34x straddling the 2x cap with no " +
-      "code change on the path (the capped bucket group-by shuffled an " +
-      "identical 284.8 MB every run, so the work was constant and the " +
-      "wall time was not). The gate's measurement now takes min-of-3 on " +
-      "the 10x legs and min-of-2 on the 1x legs (noise only ever adds " +
-      "time — the repo's bench-methodology argument); steady state is " +
-      "~1.3-1.8x, inside the budget. round 8: shingle hashing is a fused codegen " +
-      "expression (HashedShinglesExpr) — distinct hashed n-grams computed " +
-      "and deduplicated per ROW, bit-identical to xxhash64 of the string " +
-      "form, which removes the global distinct() exchange and the gram-" +
-      "string materialization from every shingle consumer (d02/d03/d06-" +
-      "d12, streaming). Measured: shingle stage 0.76s -> 0.26s at sf0.1, " +
-      "d03 end-to-end 1.94s -> 1.57s; NearDupSpec pins hash equality and " +
-      "the exchange-free plan. The same round fused the MinHash signature " +
-      "(MinHashSignatureExpr — per-row fold over the per-document shingle " +
-      "array, removing the signature groupBy from every pipeline), so the " +
-      "first shuffle in near-dup is the candidate bucket group-by, the " +
-      "first step that needs cross-document data. cacheShingles stays OFF " +
-      "by default after measuring BOTH ways in round 4: 2x win with ample " +
-      "storage headroom (500k docs, 32 threads: 10.8 s vs 21.1 s) but a " +
-      "2.3x LOSS under executor-like memory (4 threads/8 GB: 62 s vs 26 s " +
-      "— the shingle relation is 3-4x the input, eviction thrashes; the " +
-      "ScaleSmokeSpec gate caught it). Recompute is the predictable " +
-      "cluster default; cache is opt-in for headroom-rich or rescan-" +
-      "expensive sources. (Until round 9 this note was a DUPLICATE map " +
-      "key that silently shadowed the fusion note above.)"),
-    "d04_simhash" -> ("round 8: the signature is a fused per-row codegen " +
-      "fold (SimHashExpr) — no explode, no aggregate, NO shuffle in the " +
-      "whole plan; bit-identical to the 64-conditional-sums aggregate it " +
-      "replaced (differential spec + the d04/d05 goldens pin it)."),
-    "d06_dedup_clusters" -> ("round 4: one materializing job per CC round " +
-      "(was 3 — convergence now reads the round's own checkpointed output, " +
-      "propagate persists instead of checkpointing); 9.1 s -> ~4.5 s " +
-      "in-suite at sf0.1. Cluster durability: pass reliableEvery=k to " +
-      "route every k-th round through a reliable checkpoint(). Round 10 " +
-      "adjudication of the round-9 med 3.59->4.39 s drift: min-of-5 on a " +
-      "quiet box measures 3.69 s med / 3.37 s min with unchanged code — " +
-      "box noise, same verdict as d07's round-9 adjudication; no plan " +
-      "diff."),
-    "d14_dedup_keep_best" -> ("round 10 adjudication of the round-9 med " +
-      "4.18->4.48 s drift: min-of-5 on a quiet box measures 4.14 s med / " +
-      "3.68 s min with unchanged code — box noise (back under the " +
-      "round-8 median); no plan diff."),
-    "e15_codebook_drift" -> ("round 11: the append-contract decay " +
-      "measurement under the gate — stale arm = build(base) + " +
-      "append(drifted axisShift clusters) on a stored AnnIndex, retrained " +
-      "arm = build(union), both staged once per JVM like e14's fixture; " +
-      "the timed cost (~4 s med) is two stored probes (PartitionFilters " +
-      "on probed cells, 8-byte codes) + the shared brute-force truth + " +
-      "recall joins — dominated by per-probe fixed small-job latency, " +
-      "not data volume (embeddings at sf0.1 is 2k rows). Golden pins " +
-      "stale mean recall@5 0.375 vs retrained 1.000 at 100% " +
-      "appended-vs-trained; the 10/50/100% sweep lives in AnnIndexSpec. " +
-      "Round-12 bench-hygiene sweep (every r11 query with >2x med/min " +
-      "spread, quiet-box min-of-5): e15 3.34 min/3.74 med, e17 " +
-      "2.19/2.42, q51 0.89/0.94, q63 0.45/0.71, s10 0.79/0.85, e16 " +
-      "0.44/0.55, d02 2.35/2.41 — ALL tight at historical steady state; " +
-      "every r11 spread was load, not plan. Round-13 RE-SCOPE (the r12 " +
-      "verdict's correction): the 'zero >2x med/min spreads' statement " +
-      "described the BUILDER's quiet-box run (130.5 s med / 119.5 s min, " +
-      "179 queries); the round's artifact of record, the driver's " +
-      "BENCH_r12.json, measured 175.6 med / 135.1 min with TWELVE " +
-      "queries over a 2x med/min spread (d08 4.3x, q40 3.6x, s04 3.1x, " +
-      "…) — min-level per-query diffs between driver artifacts remain " +
-      "the robust cross-round signal (zero carried queries regressed " +
-      ">1.5x at min r11→r12), and the r12 spread list starts round 13's " +
-      "min-of-5 adjudication queue. ROUND 14 closes that queue: every " +
-      "r12-flagged spread cleared at min level in BENCH_r13 (the judge's " +
-      "per-query min diff found zero carried ≥1 s queries regressed " +
-      ">1.3x), and the only >2x med/min spreads in BENCH_r13 itself — " +
-      "t37 (2.7x) and d18 (2.5x) — are adjudicated in their own notes " +
-      "(t37 was structural O(L^2), fixed ~150x; d18's med was t37's " +
-      "JIT-pressure collateral, re-measured at steady state with t37 " +
-      "fixed). Standing rule carried: new >2x spreads in the round-14 " +
-      "driver artifact get quiet-box min-of-5 adjudication next round."),
-    "e14_ann_index_append" -> ("the probe half of the stored-ANN append " +
-      "cycle (build + append staged once per JVM, excluded from timed " +
-      "passes like d11-d13's fixtures): the codes scan is pruned to the " +
-      "probed cells' (frag, cell) partitions — PartitionFilters on the " +
-      "partition columns, vector-free ReadSchema (AnnIndexSpec pins " +
-      "both) — so per-query work is nprobe/k of the corpus in 8-byte " +
-      "codes regardless of how many fragments appends have accumulated."),
-    "s10_line_stats_ingest" -> ("the cut half of the continuous line-" +
-      "dedup cycle (a folded epoch + a live fragment staged once per " +
-      "JVM, compaction included so fold arithmetic sits under the hash " +
-      "gate): the accumulated stats relation sums per 8-byte hash " +
-      "first, exact (hash, text) recount only over candidates — the " +
-      "same two-phase collision safety as t15's one-shot form, with " +
-      "line text never shuffling outside the Zipf head."),
-    "src09_upsert_merge" -> ("round 10: +0.3 s vs round 9 is the durable " +
-      "staged-overwrite hop — the merged winners are written to a marked " +
-      "staging dir and read back before the dynamic overwrite, roughly " +
-      "doubling the touched-partition write volume. Deliberate: the old " +
-      "localCheckpoint pin lived in executor block storage, so a crash " +
-      "between the committer's delete and commit lost the partitions " +
-      "PERMANENTLY (ADVICE r9); the hop makes every crash window " +
-      "recoverable (ParquetWarehouseSpec drills it). Cost scales with " +
-      "the touched partitions only, like the upsert itself."),
-    "t07_tfidf_top_terms" -> ("deliberate two-scan shape (tf and df each " +
-      "re-tokenize): caching the token relation measured 1.9->3.3 s WORSE " +
-      "at sf0.1 and 6.4->3.7 s better at 10x; crossover documented in the " +
-      "query scaladoc — flip to a cached/checkpointed token relation at " +
-      "cluster scale."),
-    "d07_dedup_apply" -> ("round 9 adjudication of the round-8 med " +
-      "3.36->4.29 s swing: min-of-5 on a quiet box measures 3.58 s med / " +
-      "3.25 s min with unchanged code (t02's 0.79->1.08 swing likewise " +
-      "re-measures at 0.94 med / 0.78 min) — box noise, not a plan " +
-      "change; the plan remains CC-dominated (one materializing job per " +
-      "log-bounded round, same shape as d06)."),
-    "t13_packed_sequences" -> ("round 9: t12's chunk annotation exploded " +
-      "to the per-(sequence, document-slice) rows a trainer's loader " +
-      "consumes. The explode is a row-local generator over each doc's " +
-      "seq_first..seq_last range (output linear in total tokens/seqLen), " +
-      "so the plan is exactly t12's two-pass positions plus a Generate — " +
-      "no new exchange; the boundary arithmetic (offset_in_seq/" +
-      "offset_in_doc/len_in_seq) is pure column algebra. PackingSpec pins " +
-      "the slice laws (contiguous, sum to seqLen except the tail, cover " +
-      "each doc exactly)."),
-    "e12_pq_recall" -> ("round 9: product quantization — vectors stored " +
-      "as 8 positional sub-centroid codes (8 bytes vs 128), scanned via a " +
-      "per-query LUT (m lookups + adds per candidate, no float vector in " +
-      "the scan — PqAnnSpec pins the vector-free ReadSchema on the " +
-      "stored-codes form), exact cosine re-rank of the top-25. The query " +
-      "measures the END-TO-END recall of quantize -> LUT-scan -> re-rank " +
-      "against brute force, golden-gated at 1.0 on the clustered fixture."),
-    "e13_ivfadc_recall" -> ("round 9: IVFADC — IVF cell routing bounds " +
-      "candidates (nprobe/k = 10% budget), PQ codes bound scan bandwidth " +
-      "(8 bytes/candidate), exact re-rank restores true ranking. " +
-      "ext/AnnIndex persists this state with codes PARTITIONED BY cell, " +
-      "so the stored probe also gets PartitionFilters (AnnIndexSpec pins " +
-      "plan + result equality with the in-memory path). Round 11 " +
-      "adjudication of the r10 min-level drift (r10 min 4.91 vs r9 med " +
-      "4.20, +17%): two independent min-of-5 runs on unchanged code " +
-      "measure 4.56/5.06 min, 5.68/5.44 med — same-code MINS wobbling 9% " +
-      "between runs minutes apart means the box never went quiet. The one " +
-      "r10 change in this path (cell routing computed once via " +
-      "IvfAnn.probeCells, shared with the stored-index probe) keeps the " +
-      "plan shape and adds nothing that scales with the corpus. The " +
-      "round-11 full-suite run then measured 4.50 min / 4.61 med — a " +
-      "residual ~7% above r9's median, at the edge of the same-code " +
-      "wobble (d13 swung wider and landed back AT its r9 level in the " +
-      "same run). Recorded as predominantly box variance; re-flag if a " +
-      "genuinely quiet box still shows it. Round 12 CLOSES it: the " +
-      "demanded quiet-box re-measurement (min-of-5, idle machine) " +
-      "measures 3.59 min / 3.85 med — BELOW r9's 4.20 med with unchanged " +
-      "code, so the r11 residual was box variance end to end."),
-    "d13_index_compaction" -> ("round 11 adjudication of the r10 " +
-      "min-level drift (r10 min 4.35 vs r9 med 3.73, +17%): CLOSED as box " +
-      "noise. Two loaded-box min-of-5 runs measured 4.10/4.47 min with " +
-      "same-code mins wobbling 9% between runs minutes apart; the " +
-      "round-11 full-suite run then measured 3.72 min / 3.77 med — AT r9's " +
-      "median with unchanged code. The r10 StoredIndex-protocol move " +
-      "(link(2)-CAS publish, tmp draining, grace sweep) adds only " +
-      "driver-side metadata fs round-trips, and the restored timing " +
-      "confirms they are immaterial at sf0.1."),
-    "q25_cube" -> ("round 11 variance evidence for the r10 med-level " +
-      "spikes (q25 22.41, d03 10.60, q32 4.28, q33 2.96 — all with 6-15x " +
-      "med/min spreads in the r10 artifact): a same-code min-of-5 " +
-      "measures q25 1.39 min / 1.73 med (r9: 1.44), q32 1.25/1.29 (r9: " +
-      "1.27), q33 0.90/1.10 (r9: 0.87), d03 2.03/2.19 (r9: 1.73) — all " +
-      "at or near r9 levels at min, confirming the r10 medians were " +
-      "load-inflated, not plan changes (plans unchanged in this dump)."),
-    "q67_interval_overlap" -> ("round 12: interval × interval overlap " +
-      "via range bucketing — both sides register in covered buckets " +
-      "(row-local explode, exact long arithmetic x − pmod(x, W): no " +
-      "double floor to misbucket above 2^53), the session×window join is " +
-      "a plain BroadcastHashJoin on __bk, and each matching pair fires " +
-      "EXACTLY ONCE in its overlap-start bucket — no distinct shuffle. " +
-      "The plan's one BNLJ is the 1-row broadcast(base) window builder " +
-      "(q59's teleport-term shape), not a data join; PlanAuditSpec pins " +
-      "the hash join + BNLJ≤1 + pruned events scan."),
-    "q68_quantile_sketch" -> ("round 12: log-histogram quantile sketch " +
-      "(the percentile member of the KMV/CMS family) at deliberately " +
-      "coarse s=4 so the ESTIMATION regime sits under the hash gate — " +
-      "the bin function is integer bit arithmetic, so the DuckDB oracle " +
-      "replays binning, integer rank targeting ((p·n+99) div 100) and " +
-      "bin lower bounds bit-for-bit. One map-side-combined aggregate " +
-      "carrying ≤ bins (16-byte) pairs per group; bytes are " +
-      "partitioning-invariant (QuantileSketchSpec law)."),
-    "s19_percentile_mv" -> ("round 12: continuous percentile view — " +
-      "per-day sketch fragments on the AdditiveStats protocol, folded " +
-      "binwise (merge ≡ sketch-of-union bit-for-bit, so arrival order " +
-      "and compaction timing are invisible). At s=15 every cent value " +
-      "sits in the exact regime: the oracle is the full rank-exact " +
-      "percentile over the fact table, proving fragment/fold/replay end " +
-      "to end; q68 pins the estimating regime. Streaming twin " +
-      "percentileViewStream differential-tested in StreamingSpec."),
-    "t31_unicode_normalize" -> ("round 12: Unicode normalization as a " +
-      "codegen expression (java.text.Normalizer behind an ASCII " +
-      "isNormalized fast path — scan-stage column work, zero shuffle). " +
-      "The query appends a DECOMPOSED suffix built identically on both " +
-      "engines so the oracle exercises real NFC composition and accent " +
-      "folding, not identity on ASCII corpus text; the NFC-aware " +
-      "fingerprint makes canonically-equivalent byte forms dedup " +
-      "together (UnicodeNormalizeExprSpec)."),
-    "t32_classifier_train" -> ("round 12: IN-ENGINE ridge training for " +
-      "the hashed-BoW gate — the moment pass is one distributed " +
-      "aggregate chain (map-side bucketing, per-doc sparse vectors with " +
-      "map-side combine, row-local (B+1)² Gram fan-out, DECIMAL-folded " +
-      "sums); only (B+1)²+B+1 moment cells reach the driver (B ≤ 256 " +
-      "contract) for a deterministic Cholesky. Labels: stopword-gate " +
-      "distillation — the corpus lang column is text-INDEPENDENT by " +
-      "construction (same vocabulary in every class), so no text model " +
-      "can learn it; the spec documents this and the trained gate beats " +
-      "the synthetic stand-in 0.78 vs ~0.5 held-out acc/F1. Golden-gated " +
-      "(the solve has no SQL twin); weights bit-identical under " +
-      "repartitioning (HashedLinearScorerSpec law)."),
-    "d18_max_dup_run" -> ("round 12: maximal duplicated-run length via " +
-      "multi-resolution doubling — log₂(cap) candidate-promoted levels " +
-      "on MERKLE hashes (H_2n(p) = xxh64(H_n(p), H_n(p+n)) — no window " +
-      "text ever built or shuffled at level time; a collision only " +
-      "OVER-approximates the candidate set, which preserves the " +
-      "completeness the doubling argument needs) + one refinement pass " +
-      "whose rolling window hashes come from a codegen expression " +
-      "(WindowHashesExpr, O(maxm) per position — the HOF concat-array " +
-      "form was O(maxm²) interpreted allocations) with full text " +
-      "materialized only for candidate hashes and recounted exactly by " +
-      "(hash, text). EXACT up to the cap contract; the DuckDB oracle " +
-      "brute-forces all lengths 1…64 — exactly the all-pairs cost the " +
-      "engine avoids — and hash-matches. Bench note: this query's ~30 " +
-      "iterative stages exposed the 100-entry Janino class-cache thrash " +
-      "(~10 s/pass of recompilation); Sessions now sizes " +
-      "spark.sql.codegen.cache.maxEntries to hold the whole suite, which " +
-      "took d18 13.5→6.7 s and the full 176-query suite 201.6→151.8 s. " +
-      "Round-13 ADJUDICATION of the BENCH_r12 driver-artifact gap " +
-      "(17.25 med / 14.47 min vs builder 6.26/5.30): quiet-box solo " +
-      "min-of-5 of the r12 code = 6.64 min / 7.08 med with a 14.49 s " +
-      "COLD FIRST PASS — the driver's 14.47 'min' is every suite pass " +
-      "paying d18's cold cost; the suspected mechanism is JIT code-cache " +
-      "exhaustion under the 179-query suite's generated classes (the " +
-      "most hash-loop-compute-heavy query degrades hardest when the " +
-      "compiler flushes), so build.sbt now reserves a 1g code cache. " +
-      "Round 13 also removed the cold surface structurally: the per-level " +
-      "dataflow loop (6 x join+group-by+localCheckpoint, ~20 jobs, 2 " +
-      "driver actions per level) is now ONE row-local codegen ladder " +
-      "(MerkleLevelsExpr — the doubling combine only ever touches one " +
-      "document's hashes, so levels 2..cap are a per-row computation " +
-      "over the level-1 survivors) + ONE (level, hash) distinct-doc " +
-      "count: solo min-of-5 6.64→5.10 min, 7.08→5.22 med, and the new " +
-      "ScaleSmoke hot-key leg (the r12 brief's missing gate) measures " +
-      "0.94x of linear at 10x+3000 identical boilerplate docs. The " +
-      "brief's per-position exponential+binary refinement probe was " +
-      "adjudicated UNSOUND: a probed window's count is the number of " +
-      "documents GENERATING it, and two holders of the same string " +
-      "diverge in probe schedule (np, cap, doc-end truncation differ), " +
-      "so a partner can skip the probed length and a truly duplicated " +
-      "window counts 1; synchronizing probes globally is sound but " +
-      "trades the row-local ≤2np 8-byte fan-out for O(log cap) extra " +
-      "barrier stages — the exact cost the flat ladder just removed. " +
-      "The all-lengths enumeration stays (SpanDedup scaladoc carries " +
-      "the full argument). ROUND 14 — the r13 suite-context med " +
-      "regression (17.25→32.28 in BENCH_r13, min improved 14.47→12.94) " +
-      "adjudicates as collateral from t37's 273 s neighbor, exactly the " +
-      "JIT/code-cache mechanism above: with t37 fixed, a 3-query bench " +
-      "context measures d18 at 5.43 min / 7.18 med — at the claimed " +
-      "solo steady state; the round-14 full-suite artifact is the " +
-      "confirming measurement. ADVICE note landed in the cost " +
-      "contract: the ladder's collect_list concentrates a document's " +
-      "duplicated-token footprint into one row — O(k·log cap) structs " +
-      "for k duplicated positions — so a fully-duplicated very long " +
-      "document bounds per-row memory by its own footprint (chunk " +
-      "above ~1M duplicated positions if that contract ever tightens). " +
-      "ROUND 15 - the prescribed suite-order experiment closes the " +
-      "two-round-old driver-med question: full 195-query suite on a " +
-      "quiet box, 5 passes, d18 pinned FIRST of every pass = 4.84 min / " +
-      "5.29 med / 11.83 max; pinned LAST = 4.48 / 5.31 / 9.65 " +
-      "(SPARK_GRAFT_PIN_FIRST/PIN_LAST, the new Bench knobs). Suite " +
-      "position does not matter - the medians are identical and both " +
-      "sit well inside the ~8 s gate; the ONLY order-dependent term is " +
-      "the one-time pass-1 cold JIT+codegen cost (the max column, " +
-      "~5-6 s once per JVM). BENCH_r14's 23.71 driver med therefore " +
-      "carries no structural residue: it is the same suite-wide " +
-      "med-inflation signature as that run's 11-query spread queue. " +
-      "[CORRECTION, round 16: the r15 note here claimed 'every d18 MIN " +
-      "has been at/below 8.6 since r14' — written before the r15 driver " +
-      "run and FALSIFIED by it: BENCH_r15 recorded 11.06 min / 15.05 " +
-      "med. The accurate statement: every BUILDER quiet-box d18 min " +
-      "r13-r16 sits at 3.8-4.8 s, while the DRIVER-box mins run " +
-      "8.6-12.9 s across r13-r15 — a persistent 1.9-2.7x driver-box " +
-      "factor on this one compute-heavy query that three structural " +
-      "audits and the position experiment above could not assign to the " +
-      "plan.] ROUND 16 ADJUDICATION (the r15 verdict's What's-wrong #1, " +
-      "both prescribed exits taken): (a) COMPUTE CUT - every minDocs=2 " +
-      "candidate-promotion test in the span family (d18's level-1 token " +
-      "count, the ladder (level, hash) count, both refinement counts, " +
-      "and dupStarts' two phases) rewrites countDistinct(doc_id) >= 2 " +
-      "to min(doc_id) <> max(doc_id): exactly equivalent (both ignore " +
-      "nulls; >= 2 distinct iff min < max) and ONE partial-aggregated " +
-      "exchange instead of the distinct expansion's TWO full exchanges " +
-      "of the token-level relation (Spark plans a single distinct as " +
-      "groupBy(key, id) then groupBy(key)); oracle hashes unchanged, " +
-      "plan-pinned (no partial_count(distinct) anywhere in d15's plan). " +
-      "Builder solo min-of-5 at HEAD(r16): 3.82 min / 4.18 med / 12.44 " +
-      "cold-max vs 4.4-4.8 builder mins across r13-r15 (~15% off the " +
-      "robust statistic; the cut compounds under the driver factor). " +
-      "(b) FORMAL RE-BASELINE - the absolute ~8 s med gate is RETIRED " +
-      "as unfalsifiable under a 1.9-2.7x box factor the builder cannot " +
-      "observe; the written gate is now SUITE-RELATIVE, on the robust " +
-      "statistic: d18 min <= 8% of the same artifact's suite min-total " +
-      "(r15 artifact: 11.06/137.5 = 8.0% - exactly at the line; the " +
-      "r16 cut plus the quota-gate reclaims both push the ratio down " +
-      "from both ends), plus the builder quiet-box bound d18 min <= " +
-      "5 s at HEAD. Meds carry variance evidence only, per the " +
-      "standing min-methodology. ROUND 17 STRUCTURAL REWRITE (the r16 " +
-      "verdict's What's-wrong #1: the fresh suite-relative gate missed " +
-      "on its first artifact, 14.456/150.135 = 9.6%, driver min +31% " +
-      "while builder hit best-ever 3.82; prescribed lever = the 5x " +
-      "smoke shuffle amplification): measurement first — at sf0.1, " +
-      "100% of token AND bigram positions and 99.9% of trigram " +
-      "positions are cross-document shared (4-grams 33%, 8-grams 9%), " +
-      "so the old plan's level-1 token pruning retained ~everything " +
-      "while its three corpus-wide PER-TOKEN relations (token count, " +
-      "survivor join-back, per-doc collect_list regroup, the (id,p) " +
-      "np fold) were pure overhead. The rewrite: (0) per-doc SHORT-GRAM " +
-      "FLAGS — max_dup_run >= m is monotone (sub-windows of a dup are " +
-      "dups), so for m = 1..3 only one bit per doc matters, and it falls " +
-      "out of ONE text-keyed count with NO join-back via UNSHARED " +
-      "ATTRIBUTION: a gram with min(id) = max(id) lives in exactly one " +
-      "doc, so unshared rows group straight to their owner and " +
-      "flag_m = (row-local distinct count > attributed unshared count); " +
-      "(1) the Merkle ladder re-based from level 1 to level 4 " +
-      "(MerkleLevelsExpr grew a baseLen param; base survivors via the " +
-      "same attribution + a row-local text-exact binary-search filter, " +
-      "SharedGramsExpr, instead of a corpus join-back), ladder keys " +
-      "packed to 8 bytes (packKey) and the ladder join-back replaced by " +
-      "attribution too (FilterPackedExpr); (2) refinement enumerates " +
-      "m >= baseLen+1 only (the baseLen floor is already text-proven by " +
-      "base promotion) and NpWindowsExpr adds the consecutive-survivor " +
-      "RUN BOUND m <= runEnd(p) - p + baseLen (every 4-subgram of a dup " +
-      "window is a dup, and every holder satisfies the same bound, so " +
-      "synchronized generation is preserved) on top of 2np-1/cap/len-p. " +
-      "Also: the checkpoint repartitions ROUND-ROBIN to the shuffle " +
-      "partition count — AQE sizes a bare checkpoint by input BYTES " +
-      "(2 partitions at sf0.1) while the downstream map stages fan out " +
-      "window-count x log(cap) rows per token; parallelism 2 -> 32 alone " +
-      "was 6.6 -> 4.3 s (by-key partitioning would buy nothing: a " +
-      "checkpoint returns as a bare LogicalRDD whose partitioning " +
-      "Catalyst no longer trusts — verified by explain). Same-box " +
-      "same-session A/B at sf0.1, min-of-5+: OLD 7.08 min / 9.36 med, " +
-      "NEW 4.18 min / 4.61 med (0.59x / 0.49x); smoke hot-key leg 0.49x " +
-      "of linear (gate 2x); oracle hashes unchanged; plan-pinned " +
-      "(PlanAuditSpec d18: no partial_count(distinct), shared_grams + " +
-      "filter_packed present, (h,w) text aggregate candidate-pruned, " +
-      "narrow checkpoint schema). Exactness unchanged: flags and base " +
-      "promotion are text-keyed counts, refinement recounts by " +
-      "(hash, text), collisions anywhere only widen candidate sets."),
-    "src21_split_manifest" -> ("round 17: split-release PROVENANCE " +
-      "(SplitManifest) — the lineage record a reproducibility audit " +
-      "needs when a corpus ships: (seed, fractions, strata/key/group " +
-      "columns, per-split counts) persisted NEXT TO the assignment on " +
-      "the shared StoredIndex CAS protocol (third client after the " +
-      "near-dup and ANN indexes: relations written before the " +
-      "generation-numbered meta pointer, exclusive-create publish, " +
-      "concurrent releases lose loudly). Counts come from the WRITTEN " +
-      "assignment files, so the manifest describes the artifact of " +
-      "record. The oracle recomputes the split independently from the " +
-      "spec constants and joins its counts against the manifest " +
-      "literals — a store recording the wrong seed/fractions/columns/" +
-      "counts hash-mismatches. d20 and d22 consume this store."),
-    "t48_bpe_token_quota" -> ("round 17: the r16 verdict's Next #4 — " +
-      "t43's per-domain greedy-prefix token quota re-weighted in the " +
-      "tokens the TRAINER consumes: size(bpe_encode(text)) under the " +
-      "t26-trained 60-merge table (BpeEncodeExpr, row-local codegen in " +
-      "the scan stage) instead of the regex-token proxy. Zero new " +
-      "operator code — the budget machinery is weight-generic, which " +
-      "this entry pins. Golden-gated (greedy BPE inference has no SQL " +
-      "twin, same as t26/t27); SamplingSpec carries the law that the " +
-      "kept set is exactly the md5-ordered greedy prefix under exact " +
-      "encode lengths AND that those lengths genuinely differ from the " +
-      "regex proxy on the fixture."),
-    "s24_datacard_mv" -> ("round 17: CONTINUOUS corpus datacard — " +
-      "q73's per-language release summary maintained incrementally on " +
-      "the AdditiveStats protocol (the line/span/posting ingest " +
-      "family's newest member). Every card statistic is additive over " +
-      "disjoint batches, INCLUDING duplicate exposure: per-(lang, " +
-      "fingerprint) doc counts sum across fragments and the >1 test " +
-      "applies at read time, so a duplicate pair split across " +
-      "micro-batches counts (the s24 fixture's even/odd split cuts " +
-      "pairs deliberately; q73's oracle replays the one-shot card — " +
-      "fold arithmetic proven end to end). The quality MEAN survives " +
-      "batching bit-for-bit because fragments store the 4-dp-quantized " +
-      "sum as a x10^4 long (integer addition is associative; the " +
-      "read-side division reproduces decimalSum/count's exact " +
-      "rational). Streaming twin differential-tested in StreamingSpec " +
-      "with a mid-run compaction fold."),
-    "t49_robots_filter" -> ("round 17: robots-meta compliance filter " +
-      "(HtmlFunctions.robotsDirectives / dropNoindex) — stage -1.5 of a " +
-      "compliant crawl pipeline: a page whose <meta name=robots> " +
-      "carries noindex (or the none shorthand) must not enter the " +
-      "corpus regardless of quality. Regex-level attribute parsing " +
-      "(both quote styles + bare values, any case), RE2-safe so the " +
-      "oracle replays extraction AND the gate; plan is a pure " +
-      "scan-side filter+project, zero exchanges."),
-    "q73_corpus_datacard" -> ("round 17: the per-language summary a " +
-      "dataset release publishes — doc/token counts, mean quality, " +
-      "exact-duplicate exposure — composed from t01/t02/t04/d01's " +
-      "gated building blocks in ONE corpus pass + a fingerprint-keyed " +
-      "count + the keyed join-back; all aggregates partial, doubles " +
-      "DECIMAL-routed so the card replays bit-for-bit."),
-    "t47_html_extract" -> ("round 17: HTML main-content extraction " +
-      "(HtmlFunctions) — stage -1 of the web pipeline the r16 verdict " +
-      "named the most-hit missing operator. Invisible-content strip " +
-      "(script/style/noscript elements, comments, CDATA — fixed order), " +
-      "block segmentation on the HTML5 flow-content tags, per-block " +
-      "entity-decoded visible text, Arc90/jusText link-density rule " +
-      "(>= 25 chars, link text <= 0.33x text). Implementation choice is " +
-      "oracle-driven: everything is regexp_replace/regexp_extract_all/" +
-      "array-HOF column algebra inside the RE2 subset (no backrefs, no " +
-      "lookaround), so DuckDB replays the extraction verbatim and the " +
-      "gate hash-matches the extracted TEXT itself. Plan: scan -> " +
-      "project, ZERO exchanges/joins/aggregates (PlanAuditSpec pin) — " +
-      "embarrassingly parallel at 100 TB. Adversarial fixtures " +
-      "(ExtractSpec): fake tags inside script strings and CSS comments, " +
-      "tags hidden in comments/CDATA, double-encoded entities, nested " +
-      "anchors, unclosed tags, attribute '>' truncation — each pinned " +
-      "to the documented regex-level semantics. Found-and-fixed during " +
-      "oracle bring-up: DuckDB array_to_string([]) is NULL where " +
-      "Spark's array_join is '' — every join point coalesces. SAME " +
-      "ROUND, the production path went native: HtmlBlocksExpr computes " +
-      "the identical function with single-pass hand scanners (substring " +
-      "search, one StringBuilder per stage, a close-tag-exhaustion flag " +
-      "defusing the quadratic an adversarial page of unclosed opens " +
-      "costs the regex form) — t47 1.76 -> 0.60 s min, q72 4.26 -> " +
-      "2.50 s min at sf0.1. The regex composition stays in-tree as " +
-      "blocksReference: it DEFINES the semantics, the oracle mirrors " +
-      "it clause for clause, and ExtractSpec's differential law fuzzes " +
-      "the scanner against it on 400 random tag soups."),
-    "q72_web_curation_html" -> ("round 17: q71 recomposed from RAW HTML " +
-      "— extraction (t47) -> extracted-word-count gate (>= 20) -> " +
-      "canonicalize -> one doc per canonical URL -> domain blocklist -> " +
-      "per-domain quota, every decision DuckDB-replayed end to end. The " +
-      "extracted relation is localCheckpointed ONCE before the keeper " +
-      "pick: the keeper group-by and the keeper join both consume it, " +
-      "and re-deriving the interpreted-HOF extraction per branch " +
-      "doubled the cost (6.7 -> 4.3 s min at sf0.1); at corpus scale " +
-      "the extraction output is a persisted stage boundary anyway."),
-    "d19_contamination_coverage" -> ("round 12: per-document " +
-      "contamination report — the benchmark side reduces to distinct " +
-      "window strings (broadcast), the semi-join runs map-side inside " +
-      "the corpus scan stage (d16's plan), and coverage is the per-doc " +
-      "merged-interval aggregate HOF (no position explode). The corpus " +
-      "never shuffles; every target document reports."),
-    "q69_weekly_percentile_rollup" -> ("round 12: two-level sketch " +
-      "rollup — weekly percentiles from MERGED per-day sketches, no " +
-      "event re-scan: one day-keyed sketch aggregate, one week-keyed " +
-      "binwise merge (both map-side combined), quantile extraction per " +
-      "group. Exact-regime oracle (rank-exact weekly percentile) fails " +
-      "the hash gate if the merge loses or double-counts anything — the " +
-      "mergeable-summary property as a user operation."),
-    "t34_url_canonicalize" -> ("round 13: URL canonicalization + host " +
-      "extraction (UrlFunctions) — one split regex + array-HOF tracking-" +
-      "param filter, pure scan-stage projection: the plan has ZERO " +
-      "exchanges and zero joins (PlanAuditSpec pins it), so at 100 TB " +
-      "this is free inside the scan. The DuckDB oracle replays the " +
-      "identical regex/string algebra on RE2 over a deterministic " +
-      "per-document URL fixture covering case, both default ports, " +
-      "userinfo, head/middle/tail tracking params, fragments, empty " +
-      "paths, whitespace and a non-URL passthrough."),
-    "t35_registered_domain" -> ("round 13: registered (pay-level) domain " +
-      "by longest public-suffix match — per-row fold over the host's " +
-      "trailing label runs against a literal suffix set (k runs to n " +
-      "INCLUSIVE: a host that equals a rule is itself a public suffix, " +
-      "no registered domain), unlisted-TLD fallback to the last label. " +
-      "Zero exchanges (plan-pinned); the relation form " +
-      "(registeredDomainAgainst, broadcast suffix table) is the " +
-      "full-9k-rule PSL scale path, spec-proven equal to the literal " +
-      "form."),
-    "t36_domain_blocklist" -> ("round 13: registered-domain blocklist — " +
-      "broadcast LEFT ANTI join, no shuffle exchange (plan-pinned); null " +
-      "domains (non-URLs) survive by anti-join null semantics, which is " +
-      "what a blocklist wants. Corpus-scale lists pre-filter through " +
-      "BloomJoin (d09's composition) and finish on this exact anti-join."),
-    "q70_domain_quota" -> ("round 13: per-domain cap " +
-      "(Sampling.cappedPerStratum) — hard ceiling per registered domain " +
-      "chosen by the md5 draw (cross-engine-replayable, the epochShuffle " +
-      "discipline; NOT xxhash64, DuckDB must replay the kept set). " +
-      "ROUND 15 (the r14 verdict's skewed-strata fix): the stratum-" +
-      "partitioned window — ONE task sorts the whole mega-domain — is " +
-      "replaced by the two-pass distributed cumsum (Sampling's " +
-      "stratumRunningSumAndHandle core): range-sort on (stratum, draw), " +
-      "per-(partition, stratum) counts folded to per-stratum prefix " +
-      "offsets (≤ N−1 nonzero rows since the stratum leads the sort " +
-      "key — broadcastable at ANY strata count), within-partition " +
-      "running sum partitioned by (pid, stratum). Kept set bit-identical " +
-      "to the window form (SamplingSpec law, oracle unchanged); costs " +
-      "one extra data shuffle, buys never serializing a stratum — " +
-      "plan-pinned (no stratum-only data window) and smoke-gated " +
-      "(hot-stratum leg, 80% of rows in one stratum: 0.61-0.77x of " +
-      "linear at 10x across the round's runs; committed SMOKE_r15.log " +
-      "carries 0.77x). ROUND 16 (the r15 brief's constant reclaim): the " +
-      "two-pass is now SIZE-GATED — inputs whose summed LEAF-scan " +
-      "estimate sits under spark.graft.quota.twoPassMinBytes (default " +
-      "128 MB; 0 forces two-pass, which the plan pins and smoke legs " +
-      "set) take the proven-equivalent one-window form, returning the " +
-      "~1.5 s range-sort+persist constant the r15 driver artifacts " +
-      "priced into t43/q70/q71 at sf0.1 without giving up the 100x " +
-      "shape (leaf stats, not plan stats: non-CBO join estimates " +
-      "multiply children, so a post-join quota input would always look " +
-      "huge; a 100 TB corpus still gates two-pass from its scan size " +
-      "alone — the documented caveat is a row-EXPLODING join above tiny " +
-      "leaves, where the conf forces the scale shape). Both gate sides " +
-      "are plan-pinned, the kept set is identical by the SamplingSpec " +
-      "law, and every quota entry point gained a withX resource bracket " +
-      "(per-call private persist handle released after use — the " +
-      "SurrogateKey.withScalable discipline) so a long-running curation " +
-      "service never needs the global clearCache hammer."),
-    "t37_langid_train" -> ("round 13: multi-class one-vs-rest ridge " +
-      "training (trainRidgeMulti) over char-3-gram hashed features — k " +
-      "gates share ONE moment pass (the Gram matrix is label-" +
-      "independent; per-class right sides are 2*S_c - S_all from one " +
-      "extra per-(label, bucket) DECIMAL fold — k*(B+1) cells next to " +
-      "the (B+1)^2 Gram cells under the same explicit driver-collect " +
-      "contract), one Cholesky factorization back-substituted k times. " +
-      "Serving (scoreMulti) is an integer-exact argmax: per-token k " +
-      "broadcast-literal lookups, ONE map-side-combined groupBy carrying " +
-      "k longs per doc, ties to the lexicographically first class. The " +
-      "corpus lang column is textually uncorrelated by construction " +
-      "(t32's note), so the query DISTILLS the t03 heuristic " +
-      "(CCNet-style teacher distillation; 75.6% held-out agreement at " +
-      "64 buckets) — golden-gated; the spec proves the same trainer " +
-      "beats the marker heuristic on gold per-language F1 (macro 1.000 " +
-      "vs 0.000) on a corpus with genuine language signal. ROUND 14 — " +
-      "the r13 verdict's #1 defect (99.3 s min / 453 s max driver-" +
-      "measured on 1.5 MB, the worst perf defect in project history) " +
-      "is fixed by restructuring the whole featurize→moments path into " +
-      "three fused codegen forms: (1) CharNgramsExpr — the old " +
-      "transform(sequence(...), i -> t.substr(i, 3)) HOF re-evaluated " +
-      "the FULL lower(normalizeWs(text)) regex chain once per character " +
-      "position inside an interpreted lambda (O(L^2) regex per doc); " +
-      "the expression evaluates its child once and slices grams off one " +
-      "code-point boundary scan, O(L), bit-identical windows; (2) " +
-      "BucketCountsExpr — per-doc sparse (bucket, count) vectors built " +
-      "row-locally in one pass (replaces explode + two groupBys per " +
-      "moment pass); (3) RidgeMomentsAgg (TypedImperativeAggregate) — " +
-      "Gram AND class sums fold in ONE corpus scan into a dense " +
-      "partition-local buffer with unsigned-128-bit scaled-integer " +
-      "cells that reproduce Spark's double->DECIMAL(28,14) per-addend " +
-      "rounding EXACTLY (FeaturizerExprSpec pins fast ≡ exact on 250k " +
-      "fuzzed ratios; the committed t37 golden hash-matches unchanged), " +
-      "replacing the (B+1)^2-rows-per-doc explode run twice. scoreMulti " +
-      "became a zero-exchange row-local projection (argmax over " +
-      "Σ c_b·w[b] integer folds). Builder quiet-box: 99.3 s min → " +
-      "1.83 s med / 1.5 s min in a 2-query bench context — ~150x, " +
-      "now CHEAPER than t32's word-token path, and the featurization " +
-      "is O(L) at any corpus scale."),
-    "t38_url_dedup" -> ("round 13: URL-level dedup — three raw variants " +
-      "per page key (case/port/tracking/fragment noise) collapse to one " +
-      "canonical form; keeper = min doc_id, one count per canonical " +
-      "URL. One map-side-combined group-by; canonicalization stays in " +
-      "the scan stage."),
-    "t39_domain_report" -> ("round 13: per-domain provenance report " +
-      "(FineWeb-style release table) — docs, tokens, DECIMAL-folded " +
-      "mean quality per registered domain; one group-by on the domain " +
-      "key, everything else scan-stage."),
-    "q71_web_curation" -> ("round 13: the COMPOSED stage-0 web pipeline " +
-      "— canonicalize → URL dedup (min-doc_id keeper) → blocklist " +
-      "anti-join → per-domain quota — each stage the already-gated " +
-      "operator, the whole chain DuckDB-replayed end to end; every " +
-      "choice (keeper, quota draw) is a pure function of the data. " +
-      "ROUND 16: the quota stage's two-pass constant (the r15 " +
-      "1.59->3.14 s min regression, priced in then, reclaimed now) is " +
-      "size-gated away at bench scale — the leaf-stat gate reads the " +
-      "documents scan under the pipeline's joins, so the composed query " +
-      "takes the one-window quota form at sf0.1 and the two-pass at " +
-      "corpus scale (q70's note carries the gate contract)."),
-    "t40_phrase_blocklist" -> ("round 14: Aho–Corasick multi-pattern " +
-      "match (MultiMatchExpr, the r13 verdict's unwired file — now " +
-      "SQL-registered as multi_match, query-gated and spec-gated): the " +
-      "automaton is driver-built from the literal phrase list, ships " +
-      "once per executor via addReferenceObj, and ONE O(len(text)) walk " +
-      "per document reports every contained phrase — vs k full contains " +
-      "scans for a k-phrase blocklist; the probe is a pure scan-stage " +
-      "projection (zero exchanges before the explode). Matching is " +
-      "UTF-16 substring containment ≡ SQL contains, so the DuckDB " +
-      "oracle replays it as a VALUES-join on contains(text, phrase); " +
-      "the fixture carries output-only-via-failure-link ('park' inside " +
-      "'spark'), overlapping dictionary entries ('table' / 'fast " +
-      "table' / 'table part') and a zero-hit pattern. MultiMatchExprSpec " +
-      "adds the aba/ab/ba and ab/babc/c classics plus a 400-string " +
-      "random law vs k contains predicates."),
-    "s21_domain_quota_mv" -> ("round 14: CONTINUOUS per-domain quota " +
-      "(QuotaView on the AdditiveStats protocol) — each micro-batch " +
-      "admits documents while its registered domain's ACCUMULATED kept " +
-      "count stays ≤ cap; greedy cross-batch admission is provably ONE " +
-      "window over the concatenated (batch, draw) order (scaladoc " +
-      "equivalence argument: prior = min(cap, N_earlier) in both cases " +
-      "makes prior + within-batch rank ≡ global rank), which is exactly " +
-      "what the oracle replays. Per batch: one window shuffle over the " +
-      "BATCH + a broadcast of per-stratum prior counts; idempotent " +
-      "batch_id fragments, replay recomputes the identical admitted set " +
-      "because prior counts exclude the replaying batch's own fragment. " +
-      "Completes the continuous curation front door next to s09 " +
-      "(quality) and s10 (line stats); StreamingSpec differentials the " +
-      "foreachBatch twin incl. a cap that binds across batches and a " +
-      "null-domain stratum. ROUND 15 (ADVICE fixes): the draw window is " +
-      "built over the RENAMED doc_id/domain columns (non-default caller " +
-      "column names used to throw unresolved-column; user hashes " +
-      "reference the renamed columns by contract), and a replay of an " +
-      "already-FOLDED batch (crash between the in-foreachBatch compact " +
-      "and the checkpoint commit) short-circuits to batch ∩ store " +
-      "instead of under-admitting against a prior that contains the " +
-      "batch's own folded rows — compacted_through is the watermark, " +
-      "QuotaViewSpec pins both. ROUND 16: the within-batch rank rides " +
-      "Sampling's row-count-gated core (s22's note carries the full " +
-      "contract) — mega-batches two-pass, trigger-bounded batches keep " +
-      "the window; admitted set identical, persists released before " +
-      "return."),
-    "t10_mixture_resample" -> ("round 15: temperature (α=0.5) mixture " +
-      "resampling's per-stratum quota is a COLUMN (min(n, " +
-      "scale·floor(sqrt(n)))), so Spark's InferWindowGroupLimit cannot " +
-      "map-side-prune a rank window the way it does for q46's literal k " +
-      "— the plan check showed q46 with a Partial WindowGroupLimit " +
-      "below its exchange and t10 with NONE, i.e. t10's old " +
-      "stratum-partitioned window sorted a mega-stratum in one task " +
-      "unbounded. The rank now rides the two-pass distributed cumsum " +
-      "(q70's machinery); quota relation still broadcasts (one row per " +
-      "stratum). Kept set unchanged (SamplingSpec law + oracle); " +
-      "plan-pinned (no stratum-only data window). ROUND 16: size-gated " +
-      "like the whole quota family (q70's note) — the two-pass pin is " +
-      "conf-forced; bench scale takes the window form."),
-    "q46_stratified_sample" -> ("round 15: stratified keeps the " +
-      "ONE-window form deliberately — its LITERAL k lets " +
-      "InferWindowGroupLimit insert a Partial WindowGroupLimit below " +
-      "the stratum exchange (each map partition pre-prunes to its local " +
-      "top-k per stratum), bounding the stratum task at k·#partitions " +
-      "rows however skewed the corpus. PlanAuditSpec pins the Partial " +
-      "node's position; the column-quota and running-sum siblings " +
-      "(t10/t43/t44/q70) get no such pruning and ride the two-pass."),
-    "s23_lang_budget_mv" -> ("round 15: CONTINUOUS language-mixture " +
-      "budgets (QuotaView.appendWeightedBudgets) — t44's per-stratum " +
-      "budget RELATION as a live view, completing the quota symmetry " +
-      "(q70<->s21 counts, t43<->s22 one-budget tokens, t44<->s23 " +
-      "mixture relation). Budget-bound strata carry s22's SEEN-weight " +
-      "sentinel argument; strata ABSENT from the (driver-small, " +
-      "broadcast) relation are kept whole and never emit sentinels; a " +
-      "NULL stratum cannot be budgeted (plain-equality join, mirroring " +
-      "the one-shot operator). Oracle = one running-weight window + " +
-      "budget join over the concatenated (batch, draw) order; " +
-      "StreamingSpec differentials the foreachBatch twin incl. an " +
-      "unlimited stratum, QuotaViewSpec pins the batch laws and that " +
-      "unlimited strata stay sentinel-free."),
-    "s05_watermark_late" -> ("round 15: the watermark-lateness model's " +
-      "'max event-time seen strictly before me in arrival order' is a " +
-      "DATA-SIZED prefix max — the old Window.orderBy form was the one " +
-      "genuinely unbounded single-partition window in the registry " +
-      "(caught by the round-15 global-window sweep). Now " +
-      "PrefixAgg.maxExclusive: range-sort + per-partition maxes folded " +
-      "over ≤ #partitions rows + pid-partitioned local prefix, " +
-      "greatest() merging the seam (null-skipping = max's identity). " +
-      "Oracle keeps the definitional one-window SQL; the remaining " +
-      "global window is the #partitions-row offsets fold " +
-      "(allow-listed)."),
-    "s22_token_quota_mv" -> ("round 15: CONTINUOUS TOKEN-BUDGETED quota " +
-      "(QuotaView.appendWeighted) — t43's token budget as a live view; " +
-      "each micro-batch admits documents while its registered domain's " +
-      "accumulated SEEN token weight stays ≤ budget. The equivalence to " +
-      "ONE running-weight window over the concatenated (batch, draw) " +
-      "order needs SEEN (admitted + rejected) weight, not kept weight: " +
-      "weights OVERSHOOT (a 7-token row rejected at 6/10 spent leaves 4 " +
-      "unfilled that a one-shot run never re-offers), so kept-only " +
-      "accounting would re-open a closed stratum. Rejected weight " +
-      "therefore rides one doc_id-NULL SENTINEL row per (batch, " +
-      "stratum) in the same AdditiveStats fragments (fold merges " +
-      "sentinels per stratum; readWeighted filters them); for the COUNT " +
-      "quota (s21) the distinction vanishes since counts never " +
-      "overshoot. Per batch: one batch-sized window + a broadcast of " +
-      "per-stratum seen sums; replay story incl. the folded-batch " +
-      "short-circuit shared with s21. StreamingSpec differentials the " +
-      "foreachBatch twin on the exact overshoot counterexample. " +
-      "ROUND 16 (the r15 What's-wrong #3): the within-batch running sum " +
-      "routes through Sampling's gated core — a trigger-bounded " +
-      "micro-batch keeps the one batch-sized window, a batch at/above " +
-      "spark.graft.quota.batchTwoPassMinRows (default 1M; one count() " +
-      "of the already-materialized batch gates it) rides the two-pass, " +
-      "so a single-stratum MEGA-batch never serializes through one " +
-      "task. Admitted set identical either way (QuotaViewSpec gate " +
-      "equivalence + leak check); the returned admitted relation is now " +
-      "served from the just-written store fragment so the internal " +
-      "persists release before return (bracket discipline inside the " +
-      "operator); smoke-gated on a hot-stratum mega-batch " +
-      "(s22_hot_batch leg)."),
-    "t44_lang_token_budgets" -> ("round 14: token-budgeted LANGUAGE " +
-      "MIXTURE (Sampling.budgetCappedPerStratum) — per-stratum budgets " +
-      "from a relation (strata absent from it kept whole), the actual " +
-      "data-mixture spec 'B_en tokens of English, B_zh of Chinese, …'. " +
-      "Same greedy-prefix/running-sum semantics as t43 (two-pass " +
-      "distributed cumsum since round 15 — see q70's note) + a " +
-      "broadcast of the driver-small mixture relation; the DuckDB twin " +
-      "replays the running-sum window + budget join exactly."),
-    "t42_perplexity_buckets" -> ("round 14: CCNet's perplexity-bucket " +
-      "stage — stupid-backoff LM scoring (t20's gated operator, ref = " +
-      "even docs) composed with the exact tercile qcut (q12's operator, " +
-      "one global group): head/middle/tail labels for downstream " +
-      "mixture weighting. Cost on top of scoring: ONE grouped exact " +
-      "percentile + a broadcast edge join + a label projection. At " +
-      "100 TB swap the exact percentile for approx_percentile per the " +
-      "QuantileBucket scaladoc; the oracle replays scoring AND the cut " +
-      "(quantile_cont ≡ Spark exact interpolated percentile)."),
-    "t43_token_quota" -> ("round 14: token-BUDGETED domain quota " +
-      "(Sampling.weightCappedPerStratum) — q70's document cap " +
-      "re-expressed in the unit the trainer consumes: each registered " +
-      "domain keeps the greedy prefix of the deterministic md5 draw " +
-      "whose running token sum stays ≤ budget (positive weights make " +
-      "the running sum monotone, so the SQL running-sum window replays " +
-      "the kept set exactly). ROUND 15: rides the two-pass distributed " +
-      "cumsum (see q70's note) — the r14 verdict's mega-stratum " +
-      "serialization is structurally gone; plan-pinned and smoke-gated " +
-      "(hot-stratum leg). The continuous twin is s22. ROUND 16: " +
-      "size-gated (q70's note) — at sf0.1 the leaf-small gate takes the " +
-      "one-window form, reclaiming the r15 1.0->2.5 s two-pass constant " +
-      "the brief asked back; the two-pass shape is conf-forced in the " +
-      "plan pin and the hot-stratum smoke leg."),
-    "t41_psl_wildcard" -> ("round 14: full publicsuffix.org semantics in " +
-      "registeredDomainAgainst — wildcard rules (*.ck: '*' matches " +
-      "exactly one label) and exception rules (!www.ck: overrides the " +
-      "wildcard; the rule itself becomes the registered domain), " +
-      "resolved as TWO candidate probes per trailing run (the run " +
-      "itself for plain+exception rules, '*.'+run-minus-first for " +
-      "wildcards — the '*.' keyspace cannot collide with hostnames) " +
-      "into one broadcast hash join + one partial-aggregated two-kind " +
-      "max per id: exception k−1 prevails, else longest standard k, " +
-      "else 1. Still ≤ 2·labels row-local candidates per host, " +
-      "scan-stage at 100 TB. The DuckDB oracle replays candidate " +
-      "generation and the two-kind max exactly over a host fixture " +
-      "hitting registrant-under-wildcard, the exception host, a " +
-      "registrant UNDER the exception host, and hosts that ARE " +
-      "wildcard public suffixes (null domain)."),
-    "s20_classifier_quality_mv" -> ("round 13: continuous classifier-" +
-      "quality view — t32's trained gate evaluated as per-source " +
-      "confusion-marginal fragments on the AdditiveStats protocol (each " +
-      "doc in exactly one batch ⇒ summed fragments ARE the one-shot " +
-      "confusion matrix; exact regime). Read side emits per-slice " +
-      "precision/recall/F1/accuracy as fixed-order divisions off exact " +
-      "counts. The weight vector is part of the store identity " +
-      "(retrain ⇒ new store). Golden-gated; StreamingSpec differentials " +
-      "the foreachBatch twin (classifierQualityStream) against the " +
-      "one-shot eval with cross-batch slice interleaving."),
-    "t33_hybrid_rrf" -> ("round 12: hybrid retrieval — BM25 top-50 and " +
-      "embedding-cosine top-50 fused by reciprocal-rank fusion " +
-      "(1/(60+rank), missing list contributes 0). Ranks computed on " +
-      "ROUNDED scores with id tie-breaks so both engines cut the same " +
-      "top-k; the two rank windows are single-partition over exactly k " +
-      "pre-limited rows (bounded by construction, not data-sized); " +
-      "fusion joins 2k rows. At 100 TB each leg is its own TakeOrdered " +
-      "over the posting store (s15 probe shape) / ANN index (e14 probe " +
-      "shape); the fusion cost never grows past 2k."),
-    "t45_train_val_test" -> ("round 16: deterministic train/val/test " +
-      "split (Sampling.deterministicSplit) — the held-out carve-out " +
-      "every training pipeline runs, as a pure function of (seed, " +
-      "data): rows rank per stratum by md5(seed || '|' || key) (t14's " +
-      "cross-engine draw contract) and split i takes ranks in " +
-      "(floor(c_{i-1}*n), floor(c_i*n)] at cumulative-fraction floors — " +
-      "EXACT sizes per stratum, last split absorbs the remainder, and " +
-      "the floors are evaluated in binary64 on both engines (the oracle " +
-      "CASTs to DOUBLE) so boundary arithmetic is bit-identical. " +
-      "rand()-based splits silently re-deal the eval set across " +
-      "runs/partitionings/retries; this one is stable by construction " +
-      "(SamplingSpec: exact floors, disjoint+exhaustive, partitioning-" +
-      "invariant, seed-stable, plus the unstratified-global form which " +
-      "ALWAYS rides the two-pass — a global rank must never " +
-      "single-task). Cost: one driver-small per-stratum count broadcast " +
-      "+ the size-gated per-stratum rank (window at bench scale, " +
-      "two-pass at 100 TB — q70's gate note). Leakage companion: d20."),
-    "d20_split_leakage" -> ("round 16: split-leakage audit — near-dup " +
-      "pairs STRADDLING t45's train/val/test split (a test document " +
-      "whose near-duplicate sits in train is memorized, not held out; " +
-      "the Lee et al. 2022 eval-integrity check). Pure composition of " +
-      "two gated surfaces: deterministicSplit (same seed/strata as t45) " +
-      "joined onto d02's exact 3-gram Jaccard pairs, kept where the " +
-      "sides land in different splits; the pair relation is the tiny " +
-      "near-dup subset, so the audit cost is d02's + two id joins. At " +
-      "100 TB substitute d03's LSH pairs — the audit is edge-source-" +
-      "agnostic (d06's note). An EMPTY result is the passing audit; the " +
-      "fixture's planted duplicates keep it non-empty at sf0.01 (5 " +
-      "rows) so the oracle hash proves detection, not just plumbing. " +
-      "ROUND 17: the audit now consumes the RELEASED assignment from " +
-      "the SplitManifest store (src21) instead of re-deriving the split " +
-      "— the seed/fraction constants exist once, at the release site, " +
-      "and the audit reads what shipped (staging memoized per JVM, " +
-      "excluded from bench passes via staging_sec)."),
-    "t46_importance_sample" -> ("round 16: deterministic importance " +
-      "resampling (Sampling.importanceSample) — DSIR-style " +
-      "quality-weighted Bernoulli thinning: keep a row iff its " +
-      "deterministic md5 uniform (q62's engine-replayable formula) is " +
-      "below its per-row acceptance probability, here the ROUNDED t02 " +
-      "quality score (rounded precisely so both engines compare " +
-      "bit-identical doubles — the unrounded formula's last bits need " +
-      "not agree; t02's hash gate proves the rounded score does). " +
-      "Unlike rand()/df.sample the kept set is a pure function of the " +
-      "data (partitioning/retry/engine-stable; per-row monotone in p, " +
-      "so nested probabilities nest — SamplingSpec laws). Plan-pinned " +
-      "ZERO exchanges: draw, score, and comparison ride the scan — at " +
-      "100 TB the thinning is free inside the read."),
-    "d21_cluster_group_split" -> ("round 16: cluster-grouped split " +
-      "(Sampling.groupSplit) — the leakage-PROOF form of t45: the " +
-      "split's atoms are d06's near-dup clusters (connected components " +
-      "over d02's exact pairs; singletons group as themselves), so a " +
-      "near-dup pair straddling train/test is impossible BY " +
-      "CONSTRUCTION — d20 detects the leak a row-level split allows " +
-      "(5 straddling pairs on this corpus), this prevents it (d22 " +
-      "proves 0 of 25). Groups rank by the seed-7 md5 draw with t45's " +
-      "exact binary64 floor boundaries over the GROUP count — " +
-      "proportions group-exact, row-approximate (a mega-cluster drags " +
-      "its mass into one split; that is the point). Scale shape: d02's " +
-      "pair cost + CC + one distinct + the always-two-pass global group " +
-      "rank + one equi-join back; the whole chain incl. the recursive " +
-      "clustering is DuckDB-replayed (d06's recursive CTE)."),
-    "d22_group_split_guard" -> ("round 16: the zero-straddle GUARD on " +
-      "d21 — joins d02's pair relation onto the cluster-grouped split " +
-      "and counts pairs whose sides land in different splits: 0 by " +
-      "construction, and the (n_pairs=25, n_straddling=0) summary row " +
-      "is oracle-hashed so the guarantee is proven end-to-end, not " +
-      "asserted. The same audit over t45's row-level split reports 5 " +
-      "straddling pairs (d20) — the pair of queries is the " +
-      "detect-then-prevent story a curation pipeline actually runs. " +
-      "The pair relation is localCheckpointed ONCE and fed to both the " +
-      "eager clustering and the audit join (without it the lazy join " +
-      "re-ran d02's whole shingle join: 5.5 -> 3.45 s min at sf0.1; at " +
-      "corpus scale the pairs are the bounded near-dup subset, the " +
-      "same materialization the clustering iteration already implies). " +
-      "ROUND 17: the guard now audits the RELEASED grouped assignment " +
-      "read from the SplitManifest store — exactly what a post-release " +
-      "check runs — so the split compute (CC + group rank) happens once " +
-      "at the release site (staged, excluded from bench passes) and the " +
-      "query cost is the pair recompute + two id joins."),
-    "q44_salted_join" -> ("at sf0.1 the dim broadcasts, so this query " +
-      "exercises the salted operator's correctness, not its necessity. " +
-      "Round-5 AQE comparison (graft.AqeSkewBench, appendix below): for " +
-      "plain shuffled equi-joins prefer AQE skew handling — same hot " +
-      "corpus ran 0.9-2.6 s with the runtime split vs 4-21 s salted " +
-      "(salting replicates the other side numSalts times). Keep salting " +
-      "for the cases AQE can't touch: skewed aggs with non-combinable " +
-      "payloads, stream-stream joins, coarse-mapper inputs, AQE-off " +
-      "environments."))
-
-  /** Static appendix appended after the per-query sections. */
-  private val epilogue: String = """
-## Appendix: AQE skew handling vs manual salting (round 5, `graft.AqeSkewBench`)
-
-Corpus: lineitem x10 at sf0.1 (6M rows) with 60 % collapsed onto ONE order
-key (3.6M rows), joined to a 1.5M-row dim with autoBroadcastJoinThreshold
-off (the 100 TB too-big-to-broadcast shape), then aggregated. AQE skew
-thresholds lowered to 8 MB / 2x-median so the ~50 MB hot partition
-registers at test scale (the production defaults 256 MB / 5x are sized for
-cluster partitions; the same proportional skew at scale clears them).
-
-Measured (local[32], best of 2 passes; skew engagement read from the
-EXECUTED adaptive plan — note `df.write` runs its own QueryExecution, so
-the engagement check must `collect()` the frame it inspects):
-
-| scenario | time | skew split engaged |
-|---|---|---|
-| plain SMJ, AQE off | 2.1-2.6 s | - |
-| plain SMJ, AQE skew-join | 0.9-2.6 s | yes (`SortMergeJoin(skew=true)`) |
-| salted join (32 salts) | 4.1-21 s | n/a (plan-level) |
-| hot-key `collect_list` agg, AQE on | 1.2-2.5 s | no - not a join |
-| same agg, salted two-phase | 1.8-6.9 s | n/a |
-
-Findings and guidance:
-
-1. **For plain shuffled equi-joins, AQE wins outright.** The runtime split
-   costs nothing when it fires and nothing when it doesn't; salting costs
-   numSalts x |other side| replicated rows unconditionally (the 4-21 s
-   above is dominated by shuffling the 1.5M-row dim 32x). With AQE on -
-   the engine default - do NOT salt a plain equi-join.
-2. **AQE's split is map-granularity-bounded and can fail silently.** A hot
-   reducer partition is subdivided at map-output chunk boundaries; when
-   the hot key's rows sit in few upstream partitions (observed with a
-   cached relation materialized under coarse partitioning), the SAME query
-   shows `skew=false` and runs unsplit, with no warning. At cluster scale:
-   keep skewed-join inputs finely partitioned (or repartition before the
-   join); a silent no-split on a 100x hot key is an executor OOM.
-3. **AQE only splits JOIN partitions.** A skewed aggregation with a
-   non-combinable payload (collect_list/collect_set, large typed buffers)
-   gets no help; the manual fix is the salted two-phase aggregate
-   (group by (key, salt), merge). It pays an extra full shuffle - worth it
-   only when the hot task dominates wall time (hotShare x parallelism >> 1,
-   true at cluster scale, NOT reproducible at local[32]/6M rows where the
-   measured two-phase is 1.5-3x slower).
-4. **Where salting stays the right tool**: stream-stream joins (no AQE in
-   continuous plans), bucketed/pre-partitioned joins with no shuffle to
-   re-split, coarse-mapper inputs that can't be repartitioned, engines or
-   paths with AQE off, and the non-combinable agg skew of #3. `SkewJoin
-   .salted` (q44) stays in the surface for exactly those.
-
-## Appendix: single-partition Window inventory (round 15)
-
-The bench tail's `WindowExec: No Partition Defined` warnings, pinned:
-`PlanAuditSpec`'s global-window sweep walks every registered query's
-physical plan (recursing into cached subplans) and fails the suite on
-any empty-partition-spec Window outside an allow-list whose entries
-carry their boundedness arguments. The round-15 inventory (7 sites, all
-bounded by construction):
-
-| query | windows | why bounded |
-|---|---|---|
-| q10_surrogate_key | 1 | `SurrogateKey.dense` — reference-parity contiguous FK ids; dimension-scale by the operator's contract (scalable twin for facts) |
-| q16_dim_date | 1 | dense key over DIM_Date — calendar grain (decades × 4) |
-| t33_hybrid_rrf | 2 | rank-fusion windows over the two LIMIT-k legs (k rows each, limit plan-pinned) |
-| t12/t13 (packing) | 1 each | `Packing.streamPositions` offset fold — one row per range partition |
-| t14_epoch_shuffle | 1 | `SurrogateKey.scalable` offset fold — ≤ #partitions rows |
-| s05_watermark_late | 1 | `PrefixAgg.maxExclusive` offset fold — ≤ #partitions rows (the data-sized prefix max itself went two-pass in round 15) |
-| d21_cluster_group_split | 1 | groupSplit's unstratified group rank is always two-pass; this is its offsets fold — ≤ #partitions rows (round 16) |
-
-Round 17 removed d22's two sites from the inventory: the guard now reads
-the RELEASED assignment from the SplitManifest store, so the split's
-two-pass subtree (and its offsets folds) run once at the staged release
-site, not in the query plan — the sweep's stale-entry check enforced the
-removal.
-
-s05 previously held the ONE data-sized global window in the registry
-(prefix max over the whole events table in arrival order); the sweep
-caught it and it now rides the same two-pass discipline as the
-surrogate keys / packing positions / per-stratum cumsums. Any new
-unlisted site is a test failure, not a bench-tail warning.
-
-## Appendix: round-15 box-noise adjudication (the r14 spread queue)
-
-BENCH_r14's driver med column carried 11 queries with >2× med/min
-spreads (q03, q06, d03, t11, q66, t39, q71, e13, e15, t43, s20) while
-the builder's committed run of the SAME commit had zero. Per the
-standing rule, the top three re-measured solo min-of-5 on a quiet box
-at HEAD(r14): d03 1.67 min / 1.94 med, t11 0.88 / 1.18, q03 0.67 /
-0.88 — every min at or below its r13 level and every med a small
-multiple of its min. Mechanism: sustained box load during the driver
-window inflates MEDIANS suite-wide while leaving MINS at steady state
-(the artifact's own min column agrees — all 11 mins were at/below r13
-levels); the same signature explains e17's artifact-of-record spike
-(adjudicated in its note: solo min-of-5 3.20/3.96 vs the printed
-10.14). Judge on mins; meds carry variance evidence only.
-
-## Appendix: round-16 box-noise adjudication (the r15 spread queue)
-
-BENCH_r15's driver artifact carried 8 queries with >2× med/min spreads
-(q35 9.5×, t10 4.2×, d11 3.8×, s03, q70, t02, t43, src16 ~2.2–2.3×)
-while the builder's committed same-HEAD run had zero. Per the standing
-rule, the top three re-measured solo min-of-5 on the builder quiet box
-at HEAD(r16):
-
-| query | r15 driver min | quiet-box min / med / (med÷min) |
-|---|---|---|
-| q35_from_json | ~0.5 | 0.47 / 0.55 (1.17×) |
-| t10_mixture_resample | ~0.6 | 0.49 / 0.69 (1.40×) |
-| d11_indexed_neardup | 2.20 | 3.12 / 3.44 (1.10×) |
-
-Every quiet-box spread is tight and every min sits at or near its
-historical level (d11's r15 driver min 2.20 was itself BETTER than
-r14's 2.40 — nothing regressed at the min level; the solo 3.12 pays
-solo-run fixed latency the suite context amortizes). Same mechanism as
-the r14 and r15 adjudications above: sustained driver-box load inflates
-MEDIANS suite-wide while mins stay at steady state. The r15 artifact's
-own min column agrees. No code action; the d18 note carries the one
-spread-family item that IS actioned this round (compute cut +
-suite-relative re-baseline).
-
-## Appendix: round-17 box-noise adjudication (the r16 spread queue + e15)
-
-BENCH_r16's driver artifact carried 3 queries with >2× med/min spreads
-(q47_jaro_top1 0.344/1.228 = 3.6×, t03_lang_id 0.732/1.691 = 2.3×,
-q11_interpolate 0.324/0.669 = 2.1×), plus e15_codebook_drift's +27 % min
-drift (3.08 → 3.91) on an untouched path. Per the standing rule, all four
-re-measured solo min-of-5 on the builder box at HEAD(r17), load avg ~2/32:
-
-| query | r16 driver min / med | quiet-box min / med / (med÷min) |
-|---|---|---|
-| q47_jaro_top1 | 0.344 / 1.228 | 0.276 / 0.294 (1.07×) |
-| t03_lang_id | 0.732 / 1.691 | 0.489 / 0.532 (1.09×) |
-| q11_interpolate | 0.324 / 0.669 | 0.357 / 0.413 (1.16×) |
-| e15_codebook_drift | 3.91 / 6.62 | 3.454 / 3.978 (1.15×) |
-
-The three spread-queue queries: every quiet-box spread is tight and every
-min sits at its historical steady state — the same driver-box med-inflation
-signature as the r14/r15/r16 adjudications; no code action. e15: the
-quiet-box min is 3.45 vs the r15-era 3.08 (+12 %) and vs the r16 driver
-3.91 — about half the driver drift does NOT reproduce; what remains is
-inside the box band the d18 note documents and the path is unchanged since
-r14, so per the brief's rule (code change only if the drift reproduces)
-e15 stays on watch with no action. It remains the suite's #2 cost; its
-structural story (two stored probes + brute-force truth + recall joins)
-is audited in its own note.
-
-## Appendix: round-18 box-noise adjudication (the r17 spread queue + q59 + e15)
-
-BENCH_r17's driver artifact carried 14 queries with >2× max/min spreads; the
-r17 brief named the top five for quiet-box min-of-5, plus q59_pagerank's
-+26 % min drift (3.49 → 4.38 on an untouched path) and e15's standing watch.
-All seven re-measured on the builder box at HEAD(r18), `SPARK_GRAFT_PASSES=5`,
-load avg ~3/32:
-
-| query | r17 driver min / med (spread) | quiet min / med / (med÷min) |
-|---|---|---|
-| q32_regional_volume | 0.94 / 1.04 (6.7×) | 1.012 / 1.159 (1.15×) |
-| t11_boilerplate_ngrams | 1.09 / 1.44 (6.2×) | 0.905 / 1.196 (1.32×) |
-| t18_quality_classifier | 0.41 / 0.46 (6.0×) | 0.412 / 0.448 (1.09×) |
-| src11_scd2_merge | 1.76 / 3.89 (5.7×) | 1.794 / 2.022 (1.13×) |
-| d06_dedup_clusters | 3.12 / 4.13 (2.9×) | 2.915 / 3.357 (1.15×) |
-| q59_pagerank | 4.38 / 4.66 | 4.102 / 4.822 (1.18×) — see below |
-| e15_codebook_drift | 3.36 / 3.40 | 3.420 / 3.888 (1.14×) |
-
-The five spread-queue queries: every quiet-box spread collapses to ≤ 1.32×
-and every min sits at (or below — t11 0.905 vs 1.09; d06 2.915 vs 3.12, the
-exact-collapse commit f2d6fba) its historical steady state — the same
-driver-box med-inflation signature as the r14–r17 adjudications. src11's
-med "regression" (1.63 → 3.89 in the driver columns) is pure spread: quiet
-med 2.02 on a flat min. No code action on any of the five.
-
-**q59_pagerank — adjudicated as an r16 MIN ANOMALY, not an r17 regression.**
-The drift partially reproduces quiet (suite-context min 4.102, solo
-min-of-5 4.345), which would normally trigger a code change — but the
-longer trajectory resolves it the other way: r15 driver min 4.06, r16 3.49,
-r17 4.38, r18 quiet 4.10. The quiet steady state lands exactly on the r15
-level; the one measurement OFF the ~4.1 s line is r16's 3.49, not r17's
-4.38. The plan is unchanged since r14 (judge-audited: unrolled power steps,
-one edge⨝rank join + one partial-aggregated DECIMAL(28,15) sum per
-iteration, no collect) and no commit in r16 or r17 touched GraphOps, the
-lineitem scan, or session confs on this path. Conclusion: ~4.1 s IS the
-operator's steady state at sf0.1; the r16 artifact's min was a favorable
-outlier (the same single-run luck the min-of-N methodology usually
-protects against, landed in the flattering direction). No code action;
-the flag-line baseline for future rounds is 4.1, not 3.49.
-
-e15_codebook_drift: quiet min 3.420 — third consecutive round inside the
-3.36–3.45 band (r17 quiet 3.454, r17 driver 3.36). The band is the steady
-state; the r15-era 3.08 never reproduced. Stays on watch per the
-no-action-without-reproduction rule; still suite #2–3 cost with the
-structural audit unchanged.
-
-## Appendix: round-19 box-noise adjudication (the r18 queue: d05, q12, t46)
-
-Method per the standing rule: full-suite quiet-box min-of-5 at HEAD(r19),
-`SPARK_GRAFT_PASSES=5`, 218 queries. CALIBRATION NOTE for this table: the
-builder box ran the whole suite at min-total 170.8 s this round (the r18
-driver artifact's min-total was 134.9 at 213) — a UNIFORM ~25 % level shift
-(q59 5.24 vs driver 3.15, e13 4.31 vs 3.17, e15 3.85 vs 3.22, with the
-bottom-200 shifted alike), so the comparable quantity across boxes is each
-query's SHARE of suite min-total, not its absolute seconds. Shares below.
-
-| query | r17 driver (share) | r18 driver (share) | r19 quiet min / med (share) | verdict |
-|---|---|---|---|---|
-| d05_simhash_neardup | 0.32 (0.22 %) | 0.50 (0.37 %) | 0.667 / 0.736 (0.39 %) | regression REAL — adopted, see below |
-| q12_qcut_buckets | 0.58 | 0.58 (2.4× spread) | 0.708 / 0.724 (1.02× spread) | spread = box noise; min flat; closed |
-| t46_importance_sample | 0.74 (0.51 %) | 1.00 (0.74 %) | 1.155 / 1.196 (0.68 %) | r17's 0.74 was the favorable outlier; ~1.0–1.15 is steady state; closed |
-
-**d05 — the one-line cost accounting the r18 brief asked for:** the +0.18 s
-is the SimHash exact-collapse's clique-aggregation EXCHANGE (groupBy
-simhash → min-id rep + size + member list over the signature relation),
-bought against (a) the g² in-bucket expansion and cap-eviction recall hole
-it removes (d03's smoke fixture: 3.0 M genuine pairs silently dropped
-pre-collapse) and (b) the d05 hot-key smoke margin 0.85× → 0.84× with 2×+
-headroom (r17: approaching the 2× gate). The fusion the brief hypothesized
-("reuse the signature projection the collapse already computes once") is
-ALREADY the implemented shape — `NearDup.scala:1050` has ONE aggregation
-carrying rep+size+members precisely so the signature projection is
-consumed once; the residual cost is the exchange itself, which cannot fuse
-into the (band, chunk)-keyed bucketing shuffle (different keys). No code
-action; d05's flag-line baseline going forward is 0.50–0.67 by box, share
-~0.38 %.
-
-q12: the r18 artifact's only >2× med/min spread collapses to 1.02× quiet —
-the driver-box med-inflation signature on a flat min, same as every prior
-adjudication of this query family. t46: min share 0.68 % vs r18's 0.74 %
-(flat); the path is untouched since r15 and the r17 absolute was never
-reproduced in any quiet run — the r18 level is adopted as baseline.
-
-Round-19 additions priced in the same quiet run (min / med): t51 robots.txt
-gate 3.81 / 4.57 AS FIRST MEASURED — fixed in-round by materializing the
-(doc_id, domain, target) projection once (the rules derivation, join left
-side and distinct each re-derived the interpreted registered-domain HOF),
-now 1.07 med solo; q76 warc+robots chain 1.24 / 1.44 (reuses q74's staged
-crawl); src23 release bundle 0.52 / 0.58; src24 WET round-trip 0.04 / 0.07;
-t52 byte-BPE 1.41 / 1.55 (two merge-table trainings per run, driver-side
-over the Zipf-bounded vocab). Worst med/min spread in the quiet artifact:
-1.7× (src22, sub-second) — nothing near the 2× adjudication line.
-
-**Final-HEAD addendum (same day, after the t51 materialization fix):** a
-second full quiet min-of-5 at final HEAD measured **174.5 med / 152.6 min at
-218 queries** — the first run's 170.8 min-total carried residual load (it
-started right after the 13-minute full-test JVM exited), and the calibration
-note above overstates the box shift: at final HEAD q59 measures 4.09 (the
-adjudicated ~4.1 steady state exactly), d05 0.578 (share 0.38 % — conclusion
-unchanged), d18 3.94, e15 3.85→4.33 med-noise. t51 after the fix: 0.867 min
-/ 0.955 med IN SUITE (from 3.81). New-query min sum at final HEAD: 3.64 s
-(t51 0.87, q76 1.21, src23 0.42, src24 0.03, t52 1.11). Worst med/min
-spread in the final artifact: 1.64× — no query near the 2× line.
-
-**Second final-HEAD run (220 queries, after t53/q77 landed):** 197.1 med /
-148.5 min. Two more in-round perf fixes worth recording as PATTERNS: (1)
-t51's triple-derivation (3.81 → 0.87) — an interpreted-HOF projection
-consumed by N plan branches re-evaluates N times; materialize once. (2)
-t53's pushdown trap (3.81 → 0.42) — a filter on a projected alias (or on
-anything derived from a grouping key) SUBSTITUTES the expression and
-re-evaluates it below the aggregate over the whole corpus, once per
-predicate; pinning the tiny post-distinct relation severs the plan. Both
-are the same disease (interpreted `aggregate`-HOF expressions are
-expensive enough that Catalyst's re-evaluation heuristics, tuned for
-cheap codegen'd exprs, backfire) — any future query touching
-`registeredDomain` over a computed column should project → materialize →
-branch.
-
-## Appendix: round-20 box-noise adjudication (the r19 queue: e14, q08, q57, t17, d18)
-
-Method per the standing rule: quiet-box min-of-5 at HEAD(r20),
-`SPARK_GRAFT_PASSES=5`, restricted allowlist (e14/q08/t17/d18 in one run,
-q57 solo) — small-suite context, so absolute seconds sit slightly above
-full-suite-context numbers (fixed per-pass overhead amortizes over fewer
-queries); the comparable quantities are the min and the med÷min spread.
-
-| query | r19 driver min / med | quiet min / med (med÷min) | verdict |
-|---|---|---|---|
-| e14_ann_index_append | 2.73 / 10.26 (3.8×) | 2.805 / 3.875 (1.38×) | the 10.26 med was two contended passes (driver max 20.9); quiet med 3.88 ≈ builder r19 med 3.10 — spread = box noise, min flat on the ~2.7–2.8 steady state; closed |
-| q08_pivot_mean | — / 1.59 | 0.601 / 0.950 (1.58×) | quiet med 0.95 vs driver 1.59 — med inflation on a flat min (historical ~0.6–0.9 band); closed |
-| q57_asof_nearest_purchase | (share drift ×1.46 flagged) | 0.937 / 1.357 (1.45×) | min 0.94 on the ~1.0 steady state; the share drift was level-shift arithmetic on an untouched path (no commit has touched AsOfJoin since r16); closed |
-| t17_doc_chunking | (share drift ×1.32 flagged) | 0.614 / 0.843 (1.37×) | min 0.61 at the historical level; same conclusion; closed |
-| d18_max_dup_run | smoke margin 1.10→1.17× trend | quiet min 4.06 (4-query context); SMOKE_r20 margin **0.70× of linear** (1x 7.51 s, 10x+hot 52.7 s) | the r19 1.17× was the driver box, not the operator: the re-measured margin is back UNDER the r17 level with ~2.9× headroom to the gate; off watch |
-
-No code action on any of the five — every spread collapses quiet and every
-min sits at (or below) its adjudicated steady state; d18's smoke margin
-re-measured at 0.70× closes the only genuinely trending line in the queue.
-
-## Appendix: round-21 (first optimization round) measurement + adjudications
-
-No new queries this round; every change is an in-place plan/shape cut
-verified hash-identical against the DuckDB oracle (per-operator ledger:
-OPTIMIZATION_r21.md; before/after explain dumps: plans/r21/). The
-round-21 notes above carry the per-query cuts.
-
-Box-noise adjudication for the round's own measurements: three
-full-suite runs on the builder box measured 193.0 med / 165.7 min
-(baseline, pre-change), 194.2 / 162.5 (mid-round, CONTENDED — untouched
-control queries drifted +0.2-0.35 min alike, the classic signature), and
-164.3 / 142.5 (the same mid-round code minutes later on a quieter box).
-Per-query MINs across runs are the robust statistic per the standing
-methodology; the final-HEAD runs are recorded in OPTIMIZATION_r21.md.
-
-d18 standing-rule confirmation (the r20 verdict's quiet-queue item — its
-driver med 11.13 vs quiet 4.06 needed one confirming measurement): the
-r20 driver med was the contended box, as every prior d18 adjudication
-found. At r21 HEAD — which additionally cut d18's gram construction
-(element_at for slice) — the builder box measures 4.38 s min solo
-(min-of-5) under load, and the round's quiet final-HEAD full-suite run
-3.20 s min / 3.71 med in 224-query context, vs 6.60 at the same box's
-round-start baseline: below the old quiet steady state, no structural
-residue. Off watch; the r21 driver artifact re-prices it. One handoff
-note: d18's smoke margin moved 0.70x (r20) -> 1.10x of linear — still
-~1.8x headroom to the gate, and the element_at cut shrank the 1x
-denominator as much as the 10x numerator, but the next round's smoke
-log should confirm the ratio is stable.
-"""
-
-  /** Round-21 (first optimization round) amendments — rendered as a second
-    * note under the affected queries. Every change is an in-place
-    * plan/shape cut verified hash-identical against the oracle; the full
-    * per-operator ledger is OPTIMIZATION_r21.md and the before/after
-    * explain dumps live under plans/r21/. Numbers are per-query bench MINs
-    * on the round-21 builder box (its own baseline run), the robust
-    * statistic per the standing methodology.
-    */
-  private val round21Notes: Map[String, String] = Map(
-    "q59_pagerank" -> ("the co-supply edge relation now builds as ONE " +
-      "order-keyed collect_set with in-row pair expansion (was a 600k " +
-      "x 600k lineitem self-join + distinct); pageRank folds the " +
-      "out-degree onto the edge relation once and pins (u, v, d) cached " +
-      "hash-partitioned by the source key, and checkpoints the 1-row " +
-      "node count — per power step ONE node-sized rank exchange + ONE " +
-      "target-keyed aggregate (the before plan carried 44 Exchanges, 12 " +
-      "SortMergeJoins and 22 edge-RDD rescans for 3 steps; " +
-      "plans/r21/q59_pagerank_{before,after}.txt). DECIMAL(28,15) sums " +
-      "unchanged, oracle hash unchanged. 3.89 -> 3.08 s min."),
-    "q61_bfs_levels" -> ("shares q59's collect_set edge build; the edge " +
-      "relation additionally pins cached hash-partitioned by the source " +
-      "key (a checkpoint returns a LogicalRDD whose partitioning " +
-      "Catalyst does not trust, so every level re-exchanged the whole " +
-      "edge relation) and the visited set stays a LAZY union of the " +
-      "checkpointed level frames (one materializing job per level " +
-      "removed). 3.21 -> 2.58 s min."),
-    "d02_ngram_jaccard" -> ("the per-doc hashed-shingle ARRAYS persist " +
-      "once and set sizes come from size(hs) map-side — the plan had " +
-      "consumed the normalize+split+hash chain FOUR times from parquet " +
-      "(join sides + both size aggregates, each subtree's inferred " +
-      "filter re-evaluating it twice more) with an exploded " +
-      "groupBy(id).count exchange for sizes. 2.24 -> 1.20 s min, " +
-      "inherited by every CC consumer (d06/d07/d14/d20/d21/d22)."),
-    "d06_dedup_clusters" -> ("connectedComponents builds the symmetric " +
-      "edge relation via one in-row explode — the union-of-two-selects " +
-      "form evaluated the upstream pair pipeline once per branch before " +
-      "the checkpoint — and the seed labels are lazy (their eager " +
-      "checkpoint was a whole extra materializing job). With d02's " +
-      "array pin: 3.12 -> 2.10 s min (d07 2.93 -> 2.13, d14 3.11 -> " +
-      "2.15, d21 3.88 -> 2.43)."),
-    "d15_span_coverage" -> ("dupStarts persists the exploded window " +
-      "frame (three consumers; the plan re-ran the " +
-      "normalize+split+window-build+hash chain per consumer — 4 " +
-      "Generate subtrees) and windows() builds grams with element_at + " +
-      "concat_ws instead of slice's per-position array copy. 2.44 -> " +
-      "1.51 s min (t19 2.78 -> 1.52)."),
-    "d18_max_dup_run" -> ("mgrams/windows build with element_at + " +
-      "concat_ws (slice copied the token array once PER POSITION): " +
-      "6.60 -> 4.3-5.1 s min on the round-21 box. A second restructure " +
-      "— pinning the per-doc flag/SharedGrams state in an " +
-      "InMemoryRelation to de-duplicate expression evaluation — " +
-      "measured 4.28 -> 7.43 s min with flat neighbors and was " +
-      "REVERTED: caching the token-array columns costs more than the " +
-      "row-local expression recompute saves (negative result recorded " +
-      "in OPTIMIZATION_r21.md)."),
-    "d17_containment_pairs" -> ("same array pin + size(hs) sizes as " +
-      "d02, inside the operator. 2.01 -> 1.21 s min."),
-    "d03_minhash_lsh" -> ("the registered query turns the operator's " +
-      "documented cacheShingles knob ON (the bench box is squarely the " +
-      "measured cache-wins regime from the round-4 trade study; the " +
-      "10x hot-key smoke leg still gates the scaled behavior every " +
-      "round). 1.49 -> 1.12 s min; production default stays OFF."),
-    "d10_incremental_neardup" -> ("both incremental probe overloads " +
-      "cache the batch-union-candidate shingle relation that " +
-      "exactJaccard reads three times (sizes + both join sides) — the " +
-      "uncached form re-ran the corpus-sliver scan + semi-join and " +
-      "re-shingled the batch per consumer. d10 1.89 -> 1.27, d11 2.14 " +
-      "-> 2.03, d12 2.52 -> 2.13 s min."),
-    "d13_index_compaction" -> ("NearDupIndex.save writes its two " +
-      "relations from two threads (independent jobs on disjoint paths; " +
-      "meta publication still strictly after both, so crash-safety is " +
-      "unchanged). 3.70 -> 2.92 s min."),
-    "e13_ivfadc_recall" -> ("the two independent codebook trainings " +
-      "(PQ sub-codebooks + IVF router — each a sequential chain of 3 " +
-      "driver-collected Lloyd passes) run from two threads; results " +
-      "identical (DECIMAL sums are order-independent). 3.80 -> 2.81 s " +
-      "min. AnnIndex.build overlaps its trainings the same way."),
-    "e14_ann_index_append" -> ("the stored-index load (codebook " +
-      "collect) overlaps the persisted fixture's materialization from " +
-      "a second thread, so the probe-routing collect reads a warm " +
-      "cache. 2.69 -> 1.91 s min (e17 2.45 -> 2.09, e18 2.41 -> " +
-      "1.96)."),
-    "e15_codebook_drift" -> ("the two arm constructions (each a " +
-      "stored-index load collect + a probe-routing collect) overlap " +
-      "from two threads. 3.35 -> 2.88 s min."),
-    "q71_web_curation" -> ("the canonicalized projection persists — " +
-      "the keepers aggregate and the join-back both consumed it, each " +
-      "re-running the URL-canonicalization + PSL-domain regex chain. " +
-      "1.87 -> 1.50 s min (t08's scored projection got the same pin: " +
-      "1.37 -> 0.84)."),
-    "s26_crawl_ingest" -> ("CrawlIngest.curated now collapses to one " +
-      "row per (doc_id, canon_url) keeping the LARGEST extraction — " +
-      "deterministic and batch-split-invariant under changed-content " +
-      "refetches (the r20 advice item; identical-content refetches " +
-      "collapse exactly as the old distinct did, so the oracle hash is " +
-      "unchanged)."))
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -1687,15 +33,11 @@ log should confirm the ratio is stable.
         sb.append(s"- joins: ${if (joins.isEmpty) "none" else joins.mkString(", ")}\n")
         pushed.foreach(p => sb.append(s"- $p]\n"))
         reads.foreach(r => sb.append(s"- $r\n"))
-        notes.get(q.name).foreach(n => sb.append(s"- note: $n\n"))
-        round21Notes.get(q.name).foreach(n =>
-          sb.append(s"- note (round 21, optimization): $n\n"))
       } catch {
         case e: Throwable =>
           sb.append(s"\n## ${q.name}\n- plan unavailable: ${e.getMessage.take(80)}\n")
       }
     }
-    sb.append(epilogue)
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()

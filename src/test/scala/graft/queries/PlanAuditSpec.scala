@@ -604,7 +604,7 @@ class PlanAuditSpec extends SparkSpec {
         case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => 1
         case s: InMemoryTableScanExec => globalWindows(s.relation.cachedPlan)
       }.sum
-    // name -> (max allowed count, boundedness argument); PLANS.md appendix
+    // name -> (max allowed count, boundedness argument); plans/NOTES.md appendix
     // carries the same inventory
     val allowed: Map[String, (Int, String)] = Map(
       "q10_surrogate_key" -> ((1,
