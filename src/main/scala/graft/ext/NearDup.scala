@@ -478,8 +478,7 @@ object NearDup {
       // settle BOTH writes before an error escapes: rethrowing the first
       // failure while the other job still runs would leave it writing
       // behind the caller's cleanup
-      Seq(sh, bk).map(f => Await.ready(f, Duration.Inf).value.get)
-        .collectFirst { case scala.util.Failure(e) => throw e }
+      Seq(sh, bk).map(f => Await.ready(f, Duration.Inf).value.get).foreach(_.get)
     }
 
     /** Append ONE ingest batch's relations to the live epoch, keyed and
